@@ -27,13 +27,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    # 32 executor threads in one JVM need heap headroom: the 8g
-    # default spends the whole query sweep in GC (scaling_bench.py
-    # already runs its workers at 24g for the same reason)
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
-
     import __spark_entry__ as entrymod
     from serd_spark.session import get_spark
+    from tools.hostmem import driver_mem
+
+    # many executor threads in one JVM need heap headroom, but never
+    # more than the host can give
+    driver_mem()
 
     spark = get_spark(
         app_name="serd_spark-bench",

@@ -21,4 +21,8 @@ specifications, RFC 3986, the Apache Spark public API, and the
 reference's published public surface.
 """
 
+from serd_spark import _zipcache
+
 __version__ = "0.1.0"
+
+_zipcache.install()

@@ -204,9 +204,15 @@ def q_setsim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("toks").isNotNull())
         .localCheckpoint()
     )
-    assert sets.rdd.getNumPartitions() >= (
-        spark.sparkContext.defaultParallelism
-    ), "shingle stage must not collapse below one partition per core"
+    # explicit (survives python -O) and JVM-side: the partition count
+    # of the checkpointed RDD, without a DataFrame→Python-RDD hop
+    if (
+        sets._jdf.queryExecution().toRdd().getNumPartitions()
+        < spark.sparkContext.defaultParallelism
+    ):
+        raise RuntimeError(
+            "q_setsim: shingle stage collapsed below one partition per core"
+        )
     return set_similarity_join(sets, t_permille=800).orderBy(
         "id_a", "id_b"
     )

@@ -138,24 +138,29 @@ def lsh_bands(sigs: DataFrame) -> DataFrame:
     xxhash64 of the band's slice — JVM-side, no Python. The signature
     itself is NOT carried: the candidate join shuffles only
     (entity, band, band_hash) — at web scale the 64-long signature
-    would multiply shuffle volume ~30×."""
-    bands = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                *[F.col("sig")[i] for i in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)]
-            ).alias("band_hash"),
+    would multiply shuffle volume ~30×.
+
+    Built as ONE SQL expression: the same tree through the Column API
+    costs ~200 py4j round trips (64 element refs, 8 hashes, 8 structs),
+    measured 0.23-0.31 s of driver time per call against 0.02-0.05 s
+    parsed from SQL (4-core host)."""
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'band_hash', xxhash64("
+        + ", ".join(
+            f"sig[{i}]"
+            for i in range(b * ROWS_PER_BAND, (b + 1) * ROWS_PER_BAND)
         )
+        + "))"
         for b in range(N_BANDS)
-    ]
-    return (
-        sigs.select("entity", F.explode(F.array(*bands)).alias("bh"))
-        .select("entity", "bh.band", "bh.band_hash")
     )
+    return sigs.selectExpr("entity", f"inline(array({bands}))")
 
 
 def candidate_pairs(
-    bands: DataFrame, max_bucket: int = 256, dedup: bool = True
+    bands: DataFrame,
+    max_bucket: int = 256,
+    dedup: bool = True,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Self-join on (band, band_hash) → distinct unordered id pairs.
 
@@ -169,7 +174,20 @@ def candidate_pairs(
     consumer already aggregates per pair (``verified_links`` does);
     verifying a pair twice is cheap JVM work, a whole extra shuffle
     of the pair table is not.
+
+    ``partitions=None`` (default) leaves the shuffles to AQE. A small
+    input is what AQE coalesces into a single task, which then also
+    runs the ``zip_with`` verify that streams the pair rows; a caller
+    that knows its input is small passes a count (run_pipeline: the
+    session's ``defaultParallelism``) and the band table is
+    hash-partitioned ONCE to it on the join key, so the bucket-size
+    count, the prune and the self-join reuse that layout and the pairs
+    come out over every core. That join has no shuffle of its own
+    left for AQE to split, so there the ``max_bucket`` cap is its only
+    skew guard.
     """
+    if partitions is not None:
+        bands = bands.repartition(partitions, "band", "band_hash")
     w_count = bands.groupBy("band", "band_hash").agg(
         F.count(F.lit(1)).alias("_m")
     )
@@ -388,6 +406,7 @@ def link_entities(
     threshold: float = 0.7,
     max_bucket: int = 256,
     driver_threshold: int = 2_000_000,
+    partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Full linking stage: triples → (links, entities).
 
@@ -400,6 +419,9 @@ def link_entities(
     100 TB link graph runs) — the oracle query ``kg_linking_dist`` and
     ``tests/test_linking.py`` exercise it and assert it emits labels
     identical to the driver union-find.
+
+    ``partitions`` is forwarded to ``candidate_pairs`` (None: AQE
+    sizes the band join).
     """
     names = entity_names(triples)
     # the signature stage (Python minhash) feeds three plan branches
@@ -408,7 +430,10 @@ def link_entities(
     links = verified_links(
         # no distinct shuffle here: verified_links' per-pair groupBy
         # dedups band-multiplicity anyway
-        candidate_pairs(lsh_bands(sigs), max_bucket=max_bucket, dedup=False),
+        candidate_pairs(
+            lsh_bands(sigs), max_bucket=max_bucket, dedup=False,
+            partitions=partitions,
+        ),
         sigs,
         threshold=threshold,
     ).localCheckpoint(eager=False)

@@ -79,15 +79,34 @@ def bucket_and_salt(
 
 
 def write_triples(
-    triples_with_bucket: DataFrame, path: str, mode: str = "overwrite"
+    triples_with_bucket: DataFrame,
+    path: str,
+    mode: str = "overwrite",
+    partitions: int | None = None,
 ) -> None:
     """Materialize: directory-partitioned by subject bucket (the
     parquet stand-in for an Iceberg bucket transform — SURVEY.md §7
     risk R4), sorted within partitions by subject so per-entity scans
-    are contiguous and RLE/dictionary encoding bites."""
+    are contiguous and RLE/dictionary encoding bites.
+
+    The sort leads with the ``partitionBy`` column: the planned write
+    needs rows ordered by ``subj_bucket`` and, when the child's order
+    does not start with it, replaces the user sort with a
+    ``subj_bucket``-only one.
+
+    ``partitions=None`` (default) leaves the shuffle to AQE. AQE
+    coalesces a small graph into ONE write task (measured: 7,500 rows
+    into 64 bucket dirs, 1.02-1.23 s from one task vs 0.59-0.73 s
+    from four), so a caller that knows its graph is small passes a
+    count (run_pipeline: the session's ``defaultParallelism``)."""
+    if partitions is None:
+        shuffled = triples_with_bucket.repartition("subj_bucket", "salt")
+    else:
+        shuffled = triples_with_bucket.repartition(
+            partitions, "subj_bucket", "salt"
+        )
     (
-        triples_with_bucket.repartition("subj_bucket", "salt")
-        .sortWithinPartitions("s", "p", "o")
+        shuffled.sortWithinPartitions("subj_bucket", "s", "p", "o")
         .write.mode(mode)
         .partitionBy("subj_bucket")
         .parquet(path)
@@ -198,7 +217,7 @@ def write_keyed_table(
     (
         df.withColumn("kbucket", _key_bucket(F.col(key), n_buckets))
         .repartition("kbucket")
-        .sortWithinPartitions(key)
+        .sortWithinPartitions("kbucket", key)
         .write.mode("overwrite")
         .partitionBy("kbucket")
         .parquet(path)
@@ -268,7 +287,7 @@ def upsert_keyed_table(
     try:
         (
             merged.repartition("kbucket")
-            .sortWithinPartitions(key)
+            .sortWithinPartitions("kbucket", key)
             .write.mode("overwrite")
             .partitionBy("kbucket")
             .parquet(path)
@@ -301,7 +320,7 @@ def append_keyed_table(
     (
         df.withColumn("kbucket", _key_bucket(F.col(key), n_buckets))
         .repartition("kbucket")
-        .sortWithinPartitions(key)
+        .sortWithinPartitions("kbucket", key)
         .write.mode("append")
         .partitionBy("kbucket")
         .parquet(path)
@@ -364,7 +383,7 @@ def compact_keyed_table(
     try:
         (
             merged.repartition("kbucket")
-            .sortWithinPartitions(key)
+            .sortWithinPartitions("kbucket", key)
             .write.mode("overwrite")
             .partitionBy("kbucket")
             .parquet(path)

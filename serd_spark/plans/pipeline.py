@@ -82,16 +82,74 @@ def _commit_manifest(warehouse: str, run_id: str, obj: dict) -> None:
     ``os.replace`` into place. A crash mid-write can therefore never
     leave a half-written manifest that ``committed_runs`` treats as
     committed — the commit point is the rename, which POSIX guarantees
-    atomic on one filesystem."""
+    atomic on one filesystem. The ``manifests/`` directory is fsynced
+    after the rename so the commit itself survives a crash, and a
+    write that throws removes its temp file."""
     final = _manifest_path(warehouse, run_id)
-    tmp = os.path.join(
-        os.path.dirname(final), f".{run_id}.json.tmp.{os.getpid()}"
+    mdir = os.path.dirname(final)
+    tmp = os.path.join(mdir, f".{run_id}.json.tmp.{os.getpid()}")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, final)
+    except BaseException:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
+        raise
+    dfd = os.open(mdir, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
+def _read_manifest(warehouse: str, run_id: str) -> dict:
+    """A committed manifest. One that LISTS as committed but cannot be
+    read is warehouse corruption — atomic publication
+    (``_commit_manifest``) means it can only come from post-commit
+    damage — so every reader fails loudly instead of guessing."""
+    try:
+        with open(_manifest_path(warehouse, run_id)) as f:
+            return json.load(f)
+    except (OSError, json.JSONDecodeError) as e:
+        raise RuntimeError(
+            f"corrupt committed manifest for run {run_id!r}: {e}"
+        ) from e
+
+
+def _read_snapshots(
+    spark: SparkSession, warehouse: str, runs: list[str]
+) -> DataFrame:
+    """Extracted snapshots under their known schema: no schema
+    inference, which would cost one Spark job per read."""
+    return spark.read.schema(_EXTRACT_WITH_PART).parquet(
+        *[os.path.join(warehouse, "extracted", f"snapshot={r}") for r in runs]
     )
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, final)
+
+
+# Graph rows per core below which run_pipeline asks for one shuffle
+# partition per core in the band join and the graph write. Far below
+# it AQE coalesces those shuffles into one task (their bytes are under
+# the session's 64k minPartitionSize per core); near and above it AQE
+# already yields about one partition per core, and keeps its
+# skew-join splitting, so larger graphs stay AQE-managed.
+_SMALL_GRAPH_ROWS_PER_CORE = 65_536
+
+
+def _small_graph_partitions(spark: SparkSession, warehouse: str) -> int | None:
+    """``defaultParallelism`` if the visible graph is small enough for
+    AQE to coalesce its shuffles into too few tasks, else None. The
+    size is the visible manifests' ``triples_out``: no Spark job."""
+    n = spark.sparkContext.defaultParallelism
+    rows = sum(
+        int(_read_manifest(warehouse, r).get("triples_out", 0))
+        for r in visible_runs(warehouse)
+    )
+    return n if rows < n * _SMALL_GRAPH_ROWS_PER_CORE else None
 
 
 def committed_runs(warehouse: str) -> list[str]:
@@ -117,21 +175,12 @@ def visible_runs(
     runs = committed_runs(warehouse)
     if as_of_run is not None:
         runs = [r for r in runs if r <= as_of_run]
+    # an unreadable manifest raises: treating it as non-replacing
+    # would resurrect every run it replaces alongside the base
+    # snapshot (silent row duplication)
     replaced: set[str] = set()
     for r in runs:
-        try:
-            with open(_manifest_path(warehouse, r)) as f:
-                replaced.update(json.load(f).get("replaces", []))
-        except (OSError, json.JSONDecodeError) as e:
-            # A manifest that LISTS as committed but cannot be read is
-            # warehouse corruption: silently treating it as
-            # non-replacing would resurrect every run it replaces
-            # alongside the base snapshot (silent row duplication).
-            # Atomic publication (_commit_manifest) means this can only
-            # happen from post-commit damage — fail loudly.
-            raise RuntimeError(
-                f"corrupt committed manifest for run {r!r}: {e}"
-            ) from e
+        replaced.update(_read_manifest(warehouse, r).get("replaces", []))
     return [r for r in runs if r not in replaced]
 
 
@@ -141,11 +190,8 @@ def done_urls(spark: SparkSession, warehouse: str) -> DataFrame | None:
     runs = visible_runs(warehouse)
     if not runs:
         return None
-    paths = [
-        os.path.join(warehouse, "extracted", f"snapshot={r}") for r in runs
-    ]
     return (
-        spark.read.parquet(*paths)
+        _read_snapshots(spark, warehouse, runs)
         .select("url")
         # per-partition lineage marker rows (rec='p') carry no url
         .filter(F.col("url").isNotNull())
@@ -283,7 +329,7 @@ def run_pipeline(
     ext_path = os.path.join(warehouse, "extracted", f"snapshot={run_id}")
     extracted = extract_with_lineage(pages, lax=lax)
     extracted.write.mode("overwrite").parquet(ext_path)
-    extracted = spark.read.parquet(ext_path)
+    extracted = _read_snapshots(spark, warehouse, [run_id])
 
     lineage = lineage_from_extracted(extracted)
     lin_path = os.path.join(warehouse, "lineage", f"snapshot={run_id}")
@@ -320,14 +366,11 @@ def run_pipeline(
     )
 
     # --- graph materialization over all VISIBLE snapshots --------------
-    runs = visible_runs(warehouse)
-    all_ext = spark.read.parquet(
-        *[os.path.join(warehouse, "extracted", f"snapshot={r}") for r in runs]
-    )
     # canonicalize+dedup already fused into extraction; snapshots are
     # url-disjoint (resume anti-join), so no cross-snapshot dedup is
     # needed either
-    triples = triples_only(all_ext)
+    triples = read_triples(spark, warehouse)
+    partitions = _small_graph_partitions(spark, warehouse)
 
     if link:
         # minhash entity linking across ALL documents (north star):
@@ -335,21 +378,25 @@ def run_pipeline(
         # the graph is rewritten through the canonical surface IRIs
         from serd_spark.operators.linking import apply_canonical, link_entities
 
-        links, entities = link_entities(triples, threshold=link_threshold)
+        links, entities = link_entities(
+            triples, threshold=link_threshold, partitions=partitions
+        )
         links.write.mode("overwrite").parquet(
             os.path.join(warehouse, "links")
         )
         entities.write.mode("overwrite").parquet(
             os.path.join(warehouse, "entities")
         )
-        entities = spark.read.parquet(os.path.join(warehouse, "entities"))
+        # the in-memory frame: a read-back of the table costs a job
         triples = apply_canonical(triples, entities)
 
     hubs = detect_hubs(triples, top_k=hub_top_k)
     bucketed = bucket_and_salt(
         triples, hubs, n_buckets=n_buckets, min_hub_refs=min_hub_refs
     )
-    write_triples(bucketed, os.path.join(warehouse, "triples"))
+    write_triples(
+        bucketed, os.path.join(warehouse, "triples"), partitions=partitions
+    )
 
     return RunResult(
         run_id=run_id,
@@ -372,9 +419,7 @@ def read_extracted(
     runs = visible_runs(warehouse, as_of_run)
     if not runs:
         raise FileNotFoundError(f"no committed snapshots in {warehouse}")
-    return spark.read.parquet(
-        *[os.path.join(warehouse, "extracted", f"snapshot={r}") for r in runs]
-    )
+    return _read_snapshots(spark, warehouse, runs)
 
 
 def read_triples(
@@ -415,10 +460,7 @@ def expire_snapshots(
     old = runs[: len(runs) - keep_last]
     base_id = old[-1] + "-c"
 
-    ext = spark.read.parquet(
-        *[os.path.join(warehouse, "extracted", f"snapshot={r}") for r in old]
-    )
-    ext.write.mode("overwrite").parquet(
+    _read_snapshots(spark, warehouse, old).write.mode("overwrite").parquet(
         os.path.join(warehouse, "extracted", f"snapshot={base_id}")
     )
     lin_paths = [
@@ -435,13 +477,9 @@ def expire_snapshots(
 
     totals = {"pages_in": 0, "triples_out": 0, "bad_docs": 0}
     for r in old:
-        try:
-            with open(_manifest_path(warehouse, r)) as f:
-                m = json.load(f)
-            for k in totals:
-                totals[k] += int(m.get(k, 0))
-        except (OSError, json.JSONDecodeError):
-            continue
+        m = _read_manifest(warehouse, r)
+        for k in totals:
+            totals[k] += int(m.get(k, 0))
     # commit point — published (atomic rename) only after base data +
     # lineage landed; a crash mid-write can never leave a truncated
     # manifest that makes base AND replaced runs visible together
@@ -463,11 +501,7 @@ def vacuum(warehouse: str) -> list[str]:
     runs = committed_runs(warehouse)
     replaced: set[str] = set()
     for r in runs:
-        try:
-            with open(_manifest_path(warehouse, r)) as f:
-                replaced.update(json.load(f).get("replaces", []))
-        except (OSError, json.JSONDecodeError):
-            continue
+        replaced.update(_read_manifest(warehouse, r).get("replaces", []))
     gone = sorted(replaced & set(runs))
     for r in gone:
         for sub in ("extracted", "lineage"):

@@ -286,6 +286,45 @@ def test_corrupt_committed_manifest_raises(spark, warehouse):
         visible_runs(warehouse)
 
 
+def test_corrupt_manifest_raises_in_expire_and_vacuum(spark, warehouse):
+    """Snapshot maintenance reads manifests under the same rule as
+    visible_runs: an unreadable committed manifest is an error, never
+    a run silently left out of the base snapshot's totals."""
+    from serd_spark.plans.pipeline import expire_snapshots, vacuum
+
+    for r in ("r1", "r2"):
+        run_pipeline(
+            spark, synthesize_pages(spark, 20, seed=int(r[1:])),
+            warehouse, r, n_buckets=4, min_hub_refs=3, link=False,
+        )
+    with open(os.path.join(warehouse, "manifests", "r1.json"), "w") as f:
+        f.write('{"run_id": "r1", "pages_in": 2')  # truncated
+    with pytest.raises(RuntimeError, match="corrupt committed manifest"):
+        expire_snapshots(spark, warehouse, keep_last=1)
+    with pytest.raises(RuntimeError, match="corrupt committed manifest"):
+        vacuum(warehouse)
+    assert committed_runs(warehouse) == ["r1", "r2"]
+
+
+def test_failed_manifest_write_leaves_no_temp_file(warehouse, monkeypatch):
+    import json as _json
+
+    from serd_spark.plans.pipeline import _commit_manifest
+
+    mdir = os.path.join(warehouse, "manifests")
+    os.makedirs(mdir)
+
+    def boom(obj, f):
+        f.write('{"run_id": ')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(_json, "dump", boom)
+    with pytest.raises(OSError, match="disk full"):
+        _commit_manifest(warehouse, "rA", {"run_id": "rA"})
+    assert os.listdir(mdir) == []
+    assert committed_runs(warehouse) == []
+
+
 def test_manifest_commit_is_atomic_rename(warehouse):
     """_commit_manifest publishes via temp + os.replace: mid-write
     temp files are never listed as committed, and the landed manifest

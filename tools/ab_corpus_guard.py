@@ -10,11 +10,13 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
 
 import __spark_entry__ as entrymod  # noqa: E402
+from hostmem import driver_mem  # noqa: E402
 from serd_spark.operators import corpus  # noqa: E402
 from serd_spark.session import get_spark  # noqa: E402
+
+driver_mem()
 
 QUERIES = ["q_unigram_lm", "q_span_dedup", "q_tfidf", "q_keyword_search"]
 REPS = 4

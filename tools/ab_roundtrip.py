@@ -11,12 +11,17 @@ import os
 import sys
 import time
 
+# this script's own helper (tools/ is sys.path[0]): the tree under test
+# may predate it
+from hostmem import driver_mem
+
 tree = os.path.abspath(sys.argv[1])
 reps = int(sys.argv[2]) if len(sys.argv) > 2 else 6
 cpus = sys.argv[3] if len(sys.argv) > 3 else "32"
 sys.path.insert(0, tree)
 os.chdir(tree)
-os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+
+driver_mem()
 
 import __spark_entry__ as entrymod  # noqa: E402
 from serd_spark.session import get_spark  # noqa: E402

@@ -193,6 +193,8 @@ def main() -> None:
     if "--worker" in sys.argv:
         worker(int(sys.argv[sys.argv.index("--worker") + 1]), stage)
         return
+    from hostmem import driver_mem
+
     ensure_corpus()
     if stage == "linking":
         ensure_triples()
@@ -210,7 +212,7 @@ def main() -> None:
             ]
             out = subprocess.run(
                 cmd, capture_output=True, text=True, cwd=REPO,
-                env={**os.environ, "SPARK_DRIVER_MEM": "24g"},
+                env={**os.environ, "SPARK_DRIVER_MEM": driver_mem()},
             )
             line = [l for l in out.stdout.splitlines() if l.startswith("{")][-1]
             r = json.loads(line)
