@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from serd_spark.operators.linking import (
+    _prune_hot_buckets,
+    _sig_jaccard,
     candidate_pairs,
     lsh_bands,
     signatures,
@@ -243,14 +245,7 @@ def simhash_near_dups(
         ).alias("ch"),
     ).select(id_col, "simhash", "ch.chunk", "ch.chunk_val")
     if max_bucket is not None:
-        hot = (
-            chunks.groupBy("chunk", "chunk_val")
-            .agg(F.count(F.lit(1)).alias("_m"))
-            .filter(F.col("_m") > max_bucket)
-        )
-        chunks = chunks.join(
-            F.broadcast(hot), ["chunk", "chunk_val"], "left_anti"
-        )
+        chunks = _prune_hot_buckets(chunks, max_bucket, ("chunk", "chunk_val"))
     a = chunks.select(
         "chunk", "chunk_val",
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sig_a"),
@@ -401,18 +396,6 @@ def embedding_near_dups(
 
 # -------------------------------------------- cross-snapshot increment
 
-def _prune_hot_buckets(bands: DataFrame, max_bucket: int) -> DataFrame:
-    """Drop LSH buckets larger than ``max_bucket`` (boilerplate text
-    lands thousands of docs in one bucket; an m_new × m_old bucket
-    join must never go quadratic). Same anti-join shape as
-    ``linking.candidate_pairs``; pruned members still match through
-    their other bands."""
-    hot = bands.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("_m")
-    ).filter(F.col("_m") > max_bucket)
-    return bands.join(F.broadcast(hot), ["band", "band_hash"], "left_anti")
-
-
 def incremental_dedup(
     new_docs: DataFrame,
     old_docs: DataFrame,
@@ -445,8 +428,6 @@ def incremental_dedup(
     near). Jaccard is agree/64: a power-of-two fraction, exact in
     double on any engine.
     """
-    from serd_spark.operators.linking import N_PERM, lsh_bands, signatures
-
     fp_new = new_docs.select(
         F.col(id_col), fingerprint(F.col(text_col)).alias("fp")
     )
@@ -479,11 +460,6 @@ def incremental_dedup(
         bo.withColumnRenamed("entity", "entity_old"), ["band", "band_hash"]
     ).select("entity", "entity_old")
 
-    agree = F.aggregate(
-        F.zip_with("sig", "sig_old", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
     near = (
         cand.join(sig_new, "entity")
         .join(
@@ -493,7 +469,7 @@ def incremental_dedup(
             ),
             "entity_old",
         )
-        .withColumn("jaccard_est", (agree / F.lit(N_PERM)).cast("double"))
+        .withColumn("jaccard_est", _sig_jaccard("sig", "sig_old"))
         .filter(F.col("jaccard_est") >= threshold)
         # band multiplicity: the same pair matches in several bands
         .groupBy("entity", "entity_old")

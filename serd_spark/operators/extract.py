@@ -2,7 +2,8 @@
 
 Re-expresses the reference's reader pipeline (byte source → grammar
 → statement sink; ref: src/reader.c, src/n3.c — SURVEY.md §2A ops
-1-5, 9-10, 14) as a single shuffle-free ``mapInPandas`` stage:
+1-5, 9-10, 14) as a single shuffle-free ``mapInArrow`` stage, one kernel
+(``_extract``) behind every entry point:
 
 - unit of streaming is one *document row*, Arrow record batches are
   the "pages" (≙ ``SerdByteSource`` 4096-byte paging);
@@ -19,7 +20,12 @@ Re-expresses the reference's reader pipeline (byte source → grammar
   (≙ serd_reader_add_blank_prefix per-input scoping, ref:
   src/reader.c).
 
-Plan hygiene (SURVEY.md §4.1): a pandas UDF is an optimization
+The kernel reads each Arrow column with ``to_pylist`` and builds its
+output ``pa.RecordBatch`` from column lists against one Arrow schema
+derived from the DDL: the UDF boundary costs one conversion per batch
+each way, and nothing goes through pandas.
+
+Plan hygiene (SURVEY.md §4.1): a Python UDF is an optimization
 barrier — callers must project/filter the pages scan BEFORE this
 stage (``extract_triples`` selects only url+html itself so Parquet
 column pruning reaches the scan).
@@ -27,10 +33,13 @@ column pruning reaches the scan).
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator
+from itertools import repeat
 
-import pandas as pd
+import pyarrow as pa
 
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -68,7 +77,10 @@ TRIPLES_SCHEMA = (
     "rec string, err_line int, err_col int, err_msg string"
 )
 
-_COLS = [c.split()[0] for c in TRIPLES_SCHEMA.split(", ")]
+# the lineage form (plans/pipeline.py): every row names the task's
+# input partition; each partition ends with one rec='p' row whose
+# wall_ms is that task's extraction wall time
+_EXTRACT_WITH_PART = TRIPLES_SCHEMA + ", part_id int, wall_ms long"
 
 # worker-lifetime IRI-normalization memo: lives in the Python worker
 # process across tasks (workers are reused), keyed per module import.
@@ -84,6 +96,12 @@ def _doc_hash(url: str) -> str:
 
 def _blank(url_h: str, island: int, label: str) -> str:
     return f"{url_h}.{island}.{label}"
+
+
+def _marker(url: str | None, rec: str) -> tuple:
+    """A row with no triple or error payload: 'd' (document done),
+    's' (resume skip) or 'p' (partition lineage)."""
+    return (url,) + (None,) * 11 + (rec, None, None, None)
 
 
 def _extract_rows(
@@ -204,15 +222,81 @@ def _extract_rows(
     # one marker row per document ('d'): pages with no RDF would
     # otherwise leave no trace, breaking checkpoint-resume (they
     # must count as done) and the input_rows lineage metric
-    out.append(
-        (
-            url, None, None, None,
-            None, None, None, None,
-            None, None, None, None,
-            "d", None, None, None,
-        )
-    )
+    out.append(_marker(url, "d"))
     return out
+
+
+def _extract(
+    src: DataFrame,
+    lax: bool,
+    canonicalize: bool,
+    dedup: bool,
+    syntax_col: str | None = None,
+    lineage: bool = False,
+) -> DataFrame:
+    """The one per-document loop (≙ ``serd_reader_read_chunk``) behind
+    ``extract_triples``, ``extract_raw`` and
+    ``pipeline.extract_with_lineage``.
+
+    ``src``'s first two columns are (url, document). ``syntax_col``
+    names a per-row syntax column: the document is then parsed whole
+    as that syntax, with no island scan. ``lineage`` adds ``part_id``
+    to every row, emits one ``rec='s'`` marker instead of parsing a
+    row whose ``_skip`` column is true, and ends each partition with
+    one ``rec='p'`` row carrying the task's ``wall_ms``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    ddl = _EXTRACT_WITH_PART if lineage else TRIPLES_SCHEMA
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    has_skip = lineage and "_skip" in src.columns
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        memo = _NORM_MEMO if canonicalize else None
+        t0 = time.perf_counter()
+        pid = TaskContext.get().partitionId() if lineage else None
+
+        def to_batch(rows: list[tuple], wall_ms: int | None = None):
+            cols = list(zip(*rows))
+            if lineage:
+                cols += [[pid] * len(rows), [wall_ms] * len(rows)]
+            return pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                schema=schema,
+            )
+
+        for batch in batches:
+            syns = (
+                batch.column(syntax_col).to_pylist()
+                if syntax_col else repeat(None)
+            )
+            skips = (
+                batch.column("_skip").to_pylist() if has_skip else repeat(False)
+            )
+            rows: list[tuple] = []
+            for url, doc, syn, skip in zip(
+                batch.column(0).to_pylist(),
+                batch.column(1).to_pylist(),
+                syns,
+                skips,
+            ):
+                if skip:
+                    rows.append(_marker(url, "s"))
+                    continue
+                # a null raw syntax must NOT fall through to the HTML
+                # island scan (silently extracting nothing from raw
+                # RDF text): map it to the unsupported-syntax error
+                # path like any unknown value
+                if syntax_col and not (isinstance(syn, str) and syn):
+                    syn = "?"
+                rows.extend(_extract_rows(url, doc, lax, memo, dedup, syn))
+            if rows:
+                yield to_batch(rows)
+        if lineage:
+            wall_ms = int((time.perf_counter() - t0) * 1000)
+            yield to_batch([_marker(None, "p")], wall_ms)
+
+    return src.mapInArrow(run, schema=ddl)
 
 
 def extract_triples(
@@ -243,17 +327,7 @@ def extract_triples(
     otherwise re-crawled rows of the same url still produce
     duplicates that only the global ``dedup_triples`` removes.
     """
-    src = pages.select("url", "html")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = _NORM_MEMO if canonicalize else None
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, html in zip(pdf["url"], pdf["html"]):
-                rows.extend(_extract_rows(url, html, lax, memo, dedup))
-            yield rows_to_pdf(rows)
-
-    return src.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    return _extract(pages.select("url", "html"), lax, canonicalize, dedup)
 
 
 def extract_raw(
@@ -270,44 +344,16 @@ def extract_raw(
     scan).  ``docs`` carries (url, text, syntax ∈ turtle/trig/
     ntriples/nquads/jsonld); output schema and fused canonicalize/
     dedup semantics are identical to ``extract_triples``."""
-    src = docs.select(url_col, text_col, syntax_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = _NORM_MEMO if canonicalize else None
-        for pdf in batches:
-            rows: list[tuple] = []
-            for url, text, syn in zip(
-                pdf[url_col], pdf[text_col], pdf[syntax_col]
-            ):
-                # a null syntax must NOT fall through to the HTML
-                # island scan (silently extracting nothing from raw
-                # RDF text): map it to the unsupported-syntax error
-                # path like any unknown value
-                if not isinstance(syn, str) or not syn:
-                    syn = "?"
-                rows.extend(
-                    _extract_rows(url, text, lax, memo, dedup, syntax=syn)
-                )
-            yield rows_to_pdf(rows)
-
-    return src.mapInPandas(run, schema=TRIPLES_SCHEMA)
-
-
-def rows_to_pdf(rows: list[tuple]) -> pd.DataFrame:
-    """list-of-tuples → DataFrame via column lists: pandas's
-    row-wise constructor does per-cell type inference and is several
-    times slower on wide outputs — this path matters at 10⁷ rows/task."""
-    if not rows:
-        return pd.DataFrame({c: [] for c in _COLS})
-    cols = list(zip(*rows))
-    return pd.DataFrame(
-        {name: list(col) for name, col in zip(_COLS, cols)}, copy=False
+    return _extract(
+        docs.select(url_col, text_col, syntax_col),
+        lax, canonicalize, dedup, syntax_col=syntax_col,
     )
 
 
 def triples_only(extracted: DataFrame) -> DataFrame:
+    # wall_ms: the lineage form's per-partition column, null on 't' rows
     return extracted.filter(F.col("rec") == "t").drop(
-        "rec", "err_line", "err_col", "err_msg"
+        "rec", "err_line", "err_col", "err_msg", "wall_ms"
     )
 
 

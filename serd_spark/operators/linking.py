@@ -39,7 +39,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # fixed minhash parameters — changing them changes every signature,
@@ -156,6 +156,33 @@ def lsh_bands(sigs: DataFrame) -> DataFrame:
     return sigs.selectExpr("entity", f"inline(array({bands}))")
 
 
+def _prune_hot_buckets(
+    bands: DataFrame, max_bucket: int, keys: tuple = ("band", "band_hash")
+) -> DataFrame:
+    """Drop buckets (rows sharing ``keys``) with more than
+    ``max_bucket`` members: a bucket of m members yields m² pair rows,
+    so one boilerplate bucket must never make the bucket join
+    quadratic. Pruned members still pair through their OTHER bands,
+    which is exactly LSH's redundancy."""
+    hot = bands.groupBy(*keys).agg(F.count(F.lit(1)).alias("_m")).filter(
+        F.col("_m") > max_bucket
+    )
+    return bands.join(F.broadcast(hot), list(keys), "left_anti")
+
+
+def _sig_jaccard(sig_a: str, sig_b: str) -> Column:
+    """Minhash Jaccard estimate of two signature columns: the fraction
+    of the N_PERM positions that agree. JVM-side ``zip_with`` +
+    ``aggregate``, no Python; agree/64 is a power-of-two fraction, so
+    it is exact in double on any engine."""
+    agree = F.aggregate(
+        F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
+    return (agree / F.lit(N_PERM)).cast("double")
+
+
 def candidate_pairs(
     bands: DataFrame,
     max_bucket: int = 256,
@@ -188,13 +215,7 @@ def candidate_pairs(
     """
     if partitions is not None:
         bands = bands.repartition(partitions, "band", "band_hash")
-    w_count = bands.groupBy("band", "band_hash").agg(
-        F.count(F.lit(1)).alias("_m")
-    )
-    pruned = (
-        bands.join(F.broadcast(w_count.filter(F.col("_m") > max_bucket)),
-                   ["band", "band_hash"], "left_anti")
-    )
+    pruned = _prune_hot_buckets(bands, max_bucket)
     a = pruned.select(
         "band", "band_hash", F.col("entity").alias("entity_a")
     )
@@ -222,19 +243,10 @@ def verified_links(
     sb = sigs.select(
         F.col("entity").alias("entity_b"), F.col("sig").alias("sig_b")
     )
-    agree = F.aggregate(
-        F.zip_with(
-            "sig_a", "sig_b", lambda x, y: (x == y).cast("int")
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
     return (
         pairs.join(sa, "entity_a")
         .join(sb, "entity_b")
-        .withColumn(
-            "jaccard_est", (agree / F.lit(N_PERM)).cast("double")
-        )
+        .withColumn("jaccard_est", _sig_jaccard("sig_a", "sig_b"))
         .filter(F.col("jaccard_est") >= threshold)
         # entities with several name literals carry several signature
         # rows; without this reduce the pair would emit one link row

@@ -33,18 +33,14 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Iterator
 from dataclasses import dataclass
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from serd_spark.operators.extract import (
-    TRIPLES_SCHEMA,
-    _extract_rows,
-    rows_to_pdf,
+    _EXTRACT_WITH_PART,
+    _extract,
     triples_only,
 )
 from serd_spark.operators.materialize import (
@@ -58,8 +54,6 @@ LINEAGE_SCHEMA = (
     "partition_id int, input_rows long, triples_out long, bad_docs long, "
     "wall_ms long"
 )
-
-_EXTRACT_WITH_PART = TRIPLES_SCHEMA + ", part_id int"
 
 
 @dataclass
@@ -214,11 +208,13 @@ def extract_with_lineage(pages: DataFrame, lax: bool = True) -> DataFrame:
     left-join against committed urls), skipped pages bypass parsing
     and emit a single ``rec='s'`` marker row — the resume-skip count
     then falls out of the SAME metrics aggregation as everything else,
-    instead of two extra full input scans just to diff counts."""
-    from serd_spark.operators.extract import _NORM_MEMO
+    instead of two extra full input scans just to diff counts.
 
-    has_skip = "_skip" in pages.columns
-    if has_skip:
+    Each partition ends with one ``rec='p'`` row whose ``wall_ms`` is
+    the task's ACTUAL extraction wall time, measured inside the pass:
+    that is what makes the lineage table useful for finding slow or
+    skewed partitions instead of a run-global constant."""
+    if "_skip" in pages.columns:
         # null the payload JVM-side for skipped rows: a mostly-done
         # resume must not ship already-committed page bytes across the
         # Arrow boundary just to hit `if skip:` in Python
@@ -231,53 +227,7 @@ def extract_with_lineage(pages: DataFrame, lax: bool = True) -> DataFrame:
         )
     else:
         src = pages.select("url", "html")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
-
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        t0 = _time.time()
-        for pdf in batches:
-            rows: list[tuple] = []
-            skips = pdf["_skip"] if has_skip else [False] * len(pdf)
-            for url, html, skip in zip(pdf["url"], pdf["html"], skips):
-                if skip:
-                    rows.append(
-                        (
-                            url, None, None, None,
-                            None, None, None, None,
-                            None, None, None, None,
-                            "s", None, None, None,
-                        )
-                    )
-                else:
-                    rows.extend(
-                        _extract_rows(url, html, lax, _NORM_MEMO, dedup=True)
-                    )
-            out = rows_to_pdf(rows)
-            out["part_id"] = pid
-            yield out
-        # one rec='p' marker per partition: ACTUAL per-partition wall
-        # (measured inside the pass), stashed in err_line — this is
-        # what makes the lineage table useful for finding slow/skewed
-        # partitions instead of a run-global constant
-        wall_ms = int((_time.time() - t0) * 1000)
-        marker = rows_to_pdf(
-            [
-                (
-                    None, None, None, None,
-                    None, None, None, None,
-                    None, None, None, None,
-                    "p", wall_ms, None, None,
-                )
-            ]
-        )
-        marker["part_id"] = pid
-        yield marker
-
-    return src.mapInPandas(run, schema=_EXTRACT_WITH_PART)
+    return _extract(src, lax, canonicalize=True, dedup=True, lineage=True)
 
 
 def lineage_from_extracted(extracted: DataFrame) -> DataFrame:
@@ -287,9 +237,7 @@ def lineage_from_extracted(extracted: DataFrame) -> DataFrame:
         F.count_distinct(
             F.when(F.col("rec") == "e", F.col("url"))
         ).alias("bad_docs"),
-        F.max(
-            F.when(F.col("rec") == "p", F.col("err_line"))
-        ).cast("long").alias("wall_ms"),
+        F.max("wall_ms").alias("wall_ms"),
     )
 
 

@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import json
 import math
+import re
 from typing import Any
 
 from serd_spark.rdf import uri as urimod
@@ -55,6 +56,10 @@ from serd_spark.rdf.model import (
 )
 
 __all__ = ["parse_jsonld", "canonical_double"]
+
+# a \uD800-\uDFFF escape: the only way a JSON text can decode to a
+# str holding a surrogate
+_SURROGATE_ESCAPE = re.compile(r"\\u[dD][89a-fA-F]")
 
 _KEYWORDS = {
     "@context",
@@ -423,6 +428,17 @@ def parse_jsonld(
         if lax:
             return [], [(e.lineno, e.colno, f"bad JSON: {e.msg}")]
         raise ParseError(f"bad JSON: {e.msg}", e.lineno, e.colno) from e
+    # json.loads decodes a lone "\ud800" escape into a str that no
+    # UTF-8 sink (Arrow, parquet) can hold; a valid surrogate pair
+    # decodes to one code point, so only a lone half fails to encode
+    if _SURROGATE_ESCAPE.search(text):
+        try:
+            json.dumps(doc, ensure_ascii=False).encode("utf-8")
+        except UnicodeEncodeError:
+            msg = "bad JSON: lone surrogate \\u escape"
+            if lax:
+                return [], [(1, 1, msg)]
+            raise ParseError(msg, 1, 1) from None
     conv = _JsonLdToRdf(base_iri, context_loader=context_loader)
     try:
         conv.process(doc)

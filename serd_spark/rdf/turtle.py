@@ -133,14 +133,19 @@ def _unescape_string(s: str, err) -> str:
             hx = s[i + 2 : i + 6]
             if len(hx) != 4 or not all(h in chars.HEX_DIGITS for h in hx):
                 err("bad \\u escape")
-            out.append(chr(int(hx, 16)))
+            cp = int(hx, 16)
+            # a lone surrogate is no code point: no UTF-8 sink (Arrow,
+            # parquet, N-Triples output) can hold it
+            if 0xD800 <= cp <= 0xDFFF:
+                err(f"bad \\u escape codepoint U+{cp:X}")
+            out.append(chr(cp))
             i += 6
         elif e == "U":
             hx = s[i + 2 : i + 10]
             if len(hx) != 8 or not all(h in chars.HEX_DIGITS for h in hx):
                 err("bad \\U escape")
             cp = int(hx, 16)
-            if cp > 0x10FFFF:
+            if cp > 0x10FFFF or 0xD800 <= cp <= 0xDFFF:
                 err(f"bad \\U escape codepoint U+{cp:X}")
             out.append(chr(cp))
             i += 10

@@ -42,7 +42,7 @@ WARC_VERSION = b"WARC/1.0"
 _CRLF = b"\r\n"
 _HDR_END = b"\r\n\r\n"
 
-# columns of the parsed-record output (rows_to_pdf-style column lists)
+# columns of the parsed-record output (built from column lists)
 _READ_SCHEMA = "url string, warc_ts timestamp, html binary"
 _ERR_SCHEMA = "warc_file string, offset long, err string"
 

@@ -11,7 +11,7 @@ equivalent increment is *one micro-batch of newly crawled pages*:
   guarantee of chunked parsing).
 - ``stream_extract``: the SAME fused extraction stage as batch
   (`extract_triples(canonicalize=True, dedup=True)`) applied to the
-  stream — mapInPandas is fully streaming-composable, so nothing is
+  stream — mapInArrow is fully streaming-composable, so nothing is
   reimplemented.
 - ``run_incremental``: ``foreachBatch`` sink appending each
   micro-batch's triples to the warehouse with checkpointing —
@@ -51,7 +51,7 @@ def stream_pages(
 
 def stream_extract(pages_stream: DataFrame, lax: bool = True) -> DataFrame:
     """Fused extraction applied to a streaming DataFrame — identical
-    code path to batch (mapInPandas composes with streaming)."""
+    code path to batch (mapInArrow composes with streaming)."""
     return extract_triples(
         pages_stream, lax=lax, canonicalize=True, dedup=True
     )

@@ -175,3 +175,55 @@ def test_skolemize_replaces_blanks(spark):
     assert got[1].o == "lit" and got[1].o_kind == 1  # literals untouched
     # reversible by prefix strip: both mentions map to the SAME iri
     assert got[0].o == got[1].s
+
+
+def test_lone_surrogate_escape_is_one_bad_document(spark):
+    """A lone-surrogate escape used to reach the Arrow boundary as an
+    unencodable str and fail the whole lax task; it must now cost only
+    its own document, through both entry points of the kernel."""
+    from serd_spark.operators.extract import extract_raw
+
+    raw = spark.createDataFrame(
+        [("http://d/bad.nt", '<http://s> <http://p> "x\\uD800y" .\n', "ntriples"),
+         ("http://d/good.nt", '<http://s> <http://p> "ok" .\n', "ntriples")],
+        "url string, text string, syntax string",
+    )
+    island = '<script type="application/ld+json">{}</script>'
+    pages = spark.createDataFrame(
+        [("http://bad.example/",
+          island.format('{"@id": "http://x/a", "http://x/p": "\\ud800"}').encode()),
+         ("http://good.example/",
+          island.format('{"@id": "http://x/a", "http://x/p": "ok"}').encode())],
+        "url string, html binary",
+    )
+    for ext, bad, good in (
+        (extract_raw(raw), "http://d/bad.nt", "http://d/good.nt"),
+        (extract_triples(pages), "http://bad.example/", "http://good.example/"),
+    ):
+        ext = ext.cache()
+        assert [r.url for r in errors_only(ext).collect()] == [bad]
+        assert [(r.url, r.o) for r in triples_only(ext).collect()] == [(good, "ok")]
+
+
+def test_lineage_kernel_matches_extract_triples(spark):
+    """``extract_with_lineage`` is ``extract_triples(canonicalize=True,
+    dedup=True)`` plus lineage columns: same triple rows, and one
+    rec='p' row per partition with a typed wall_ms (err_line stays an
+    error line)."""
+    from serd_spark.plans.pipeline import extract_with_lineage
+
+    pages = latest_crawl(synthesize_pages(spark, 60, seed=5, partitions=3))
+    lin = extract_with_lineage(pages).cache()
+    got = lin.filter(F.col("rec") == "t").drop("part_id", "wall_ms")
+    want = extract_triples(pages, canonicalize=True, dedup=True).filter(
+        F.col("rec") == "t"
+    )
+    assert got.count() > 0
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+    p = lin.filter(F.col("rec") == "p").collect()
+    assert sorted(r.part_id for r in p) == sorted(
+        r.part_id for r in lin.select("part_id").distinct().collect()
+    )
+    assert all(r.wall_ms is not None and r.err_line is None for r in p)
+    assert dict(lin.dtypes)["wall_ms"] == "bigint"

@@ -4,7 +4,14 @@ import pytest
 
 from serd_spark.rdf.jsonld import canonical_double, parse_jsonld
 from serd_spark.rdf.microdata import parse_microdata
-from serd_spark.rdf.model import BLANK, IRI, LITERAL, RDF_TYPE, XSD_INTEGER
+from serd_spark.rdf.model import (
+    BLANK,
+    IRI,
+    LITERAL,
+    RDF_TYPE,
+    XSD_INTEGER,
+    ParseError,
+)
 
 
 def spo(stmts):
@@ -99,6 +106,27 @@ def test_jsonld_bad_json_lax_and_strict():
     assert stmts == [] and len(errs) == 1
     with pytest.raises(Exception):
         parse_jsonld("{not json", lax=False)
+
+
+@pytest.mark.parametrize(
+    "doc",
+    [
+        '{"@id": "http://a/", "http://p/": "x\\ud800y"}',
+        '{"@id": "http://a/\\uDC00", "http://p/": "v"}',
+    ],
+)
+def test_jsonld_lone_surrogate_escape_is_error(doc):
+    stmts, errs = parse_jsonld(doc, lax=True)
+    assert stmts == [] and "surrogate" in errs[0][2]
+    with pytest.raises(ParseError):
+        parse_jsonld(doc, lax=False)
+
+
+def test_jsonld_surrogate_pair_escape_parses():
+    stmts, errs = parse_jsonld(
+        '{"@id": "http://a/", "http://p/": "\\ud83d\\ude00 \\\\ud800"}'
+    )
+    assert errs == [] and stmts[0].object.value == "\U0001F600 \\ud800"
 
 
 def test_jsonld_remote_context_is_error():

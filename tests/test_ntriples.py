@@ -100,6 +100,16 @@ def test_lax_collects_errors():
     assert errs[0][0] == 2  # line number
 
 
+@pytest.mark.parametrize("parse, g", [(parse_ntriples, ""), (parse_nquads, " <http://g>")])
+def test_lone_surrogate_escape_lax_error(parse, g):
+    doc = f'<http://s> <http://p> "x\\uD800y"{g} .\n<http://s> <http://p> "ok"{g} .\n'
+    stmts, errs = parse(doc, lax=True)
+    assert [s.object.value for s in stmts] == ["ok"]
+    assert len(errs) == 1 and errs[0][0] == 1
+    with pytest.raises(ParseError):
+        parse(doc)
+
+
 def test_iri_escaping_in_writer():
     st = Statement(
         Term(IRI, "http://s/<weird> space"),

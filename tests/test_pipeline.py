@@ -353,3 +353,25 @@ def test_manifest_commit_is_atomic_rename(warehouse):
         if ".tmp." in f and not f.startswith(".rX")
     ]
     assert left == []
+
+
+def test_lone_surrogate_page_counts_as_bad_doc(spark, warehouse):
+    """A lax run over a page whose JSON-LD island holds a lone
+    surrogate escape completes and counts that page in bad_docs."""
+    from datetime import datetime
+
+    from serd_spark.sources.pages import PAGES_SCHEMA
+
+    island = '<script type="application/ld+json">{}</script>'
+    ts = datetime(2026, 1, 1)
+    pages = spark.createDataFrame(
+        [("http://bad.example/", ts,
+          island.format('{"@id": "http://x/a", "http://x/p": "\\ud800"}').encode(),
+          "", "en"),
+         ("http://good.example/", ts,
+          island.format('{"@id": "http://x/a", "http://x/p": "ok"}').encode(),
+          "", "en")],
+        PAGES_SCHEMA,
+    )
+    r = run_pipeline(spark, pages, warehouse, "r1", link=False, n_buckets=4)
+    assert (r.pages_in, r.triples_out, r.bad_docs) == (2, 1, 1)

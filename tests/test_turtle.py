@@ -395,3 +395,21 @@ def test_lax_resync_ignores_dot_in_string():
     stmts, errs = parse_turtle(doc, lax=True)
     assert len(errs) == 1
     assert any(s.subject.value == "http://x" for s in stmts)
+
+
+@pytest.mark.parametrize(
+    "parse, doc",
+    [
+        (parse_turtle, '<http://s> <http://p> "x\\uD800y" .\n<http://s> <http://p> "ok" .\n'),
+        (parse_turtle, '<http://s> <http://p> "x\\U0000DFFFy" .\n<http://s> <http://p> "ok" .\n'),
+        (parse_trig, '<http://s> <http://p> "x\\ud800y" .\n<http://g> { <http://s> <http://p> "ok" }\n'),
+    ],
+)
+def test_lone_surrogate_escape_rejected(parse, doc):
+    """A lone surrogate is no code point: decoding it would hand the
+    Arrow boundary a str it cannot encode and fail the whole task."""
+    stmts, errs = parse(doc, lax=True)
+    assert [s.object.value for s in stmts] == ["ok"]
+    assert len(errs) == 1 and "codepoint U+D" in errs[0][2]
+    with pytest.raises(ParseError):
+        parse(doc)

@@ -27,11 +27,12 @@ Usage:
   python tools/scaling_bench.py --stage linking    # shuffle stage
   python tools/scaling_bench.py --worker N ...     # internal (pinned)
 
-Output file is keyed by stage AND basis so records never overwrite
-each other (CLAUDE.md: the 4→16 and 8→32 bases measure different
-things): extract → BENCH/scaling.json (N=4) / scaling_8_32.json
-(N=8); linking → BENCH/scaling_linking.json /
-scaling_linking_8_32.json.
+N defaults to a quarter of the host's cores (1→4 on a 4-core box);
+``SPARK_GRAFT_SCALE_N`` overrides it. Output file is keyed by stage
+AND basis so records never overwrite each other (the 4→16 and 8→32
+bases measure different things): extract →
+BENCH/scaling.json (N=4), otherwise scaling_<N>_<4N>.json; linking →
+BENCH/scaling_linking.json / scaling_linking_<N>_<4N>.json.
 """
 
 from __future__ import annotations
@@ -45,10 +46,14 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from __spark_entry__ import _pkg_hash  # noqa: E402
+
 N_PAGES = int(os.environ.get("SPARK_GRAFT_SCALE_PAGES", "300000"))
 RICHNESS = int(os.environ.get("SPARK_GRAFT_SCALE_RICHNESS", "8"))
 REPEATS = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "3"))
-SMALL = int(os.environ.get("SPARK_GRAFT_SCALE_N", "8"))
+SMALL = int(
+    os.environ.get("SPARK_GRAFT_SCALE_N") or max(1, (os.cpu_count() or 4) // 4)
+)
 BIG = 4 * SMALL
 STAGE = os.environ.get("SPARK_GRAFT_SCALE_STAGE", "extract")
 
@@ -58,33 +63,18 @@ def _out_name(stage: str, small: int) -> str:
     return f"{base}.json" if small == 4 else f"{base}_{small}_{small * 4}.json"
 
 
-def _default_corpus() -> str:
-    """Corpus path keyed by (pages, richness, generator-code hash) —
-    the same self-invalidation bench.py uses, so editing the page
-    generator can never silently re-measure stale input."""
-    import hashlib
-
-    import serd_spark.sources.pages as _pages_mod
-
-    with open(_pages_mod.__file__, "rb") as fh:
-        gen_hash = hashlib.blake2b(fh.read(), digest_size=6).hexdigest()
-    return f"/tmp/serd_spark_scale_corpus_{N_PAGES}_r{RICHNESS}_{gen_hash}"
-
-
-CORPUS = os.environ.get("SPARK_GRAFT_SCALE_CORPUS") or _default_corpus()
+# inputs keyed by the package hash: the page generator and the
+# extractor import the parsers, so a narrower key (one file's hash)
+# would silently re-measure stale pages or triples after a parser edit
+CORPUS = os.environ.get("SPARK_GRAFT_SCALE_CORPUS") or (
+    f"/tmp/serd_spark_scale_corpus_{N_PAGES}_r{RICHNESS}_{_pkg_hash()}"
+)
 
 
 def _triples_corpus() -> str:
-    """Triple-table path for the linking stage, keyed by the pages
-    corpus AND the extraction-code hash (editing the extractor can
-    never silently re-measure stale triples)."""
-    import hashlib
-
-    import serd_spark.operators.extract as _ex_mod
-
-    with open(_ex_mod.__file__, "rb") as fh:
-        ex_hash = hashlib.blake2b(fh.read(), digest_size=6).hexdigest()
-    return f"{CORPUS}_triples_{ex_hash}"
+    """Triple-table path for the linking stage: the pages corpus plus
+    the package hash (an overridden corpus path carries none)."""
+    return f"{CORPUS}_triples_{_pkg_hash()}"
 
 
 def ensure_corpus() -> None:
@@ -225,8 +215,6 @@ def main() -> None:
     # least-contended estimate is the min across ALL repeats of all
     # epochs — but mins from different code versions must never mix
     # (an efficiency number describing no single version of the code)
-    from __spark_entry__ import _pkg_hash
-
     pkg_hash = _pkg_hash()
     out_path = os.path.join(REPO, "BENCH", _out_name(stage, SMALL))
     if os.path.exists(out_path):
