@@ -156,6 +156,22 @@ def _materialize(sf_dir: str, what: str, df_fn) -> None:
         _MATERIALIZED.add(out)
 
 
+def _materialize_minhash(
+    spark: SparkSession, sf_dir: str, docs: DataFrame, sigs: str, bands: str
+) -> None:
+    """Write a documents table's minhash signatures (as ``sigs``) and
+    the LSH bands cut from the written signatures (as ``bands``), so
+    DuckDB can replay the candidate pipeline (bucket-cap prune → band
+    equi-join → signature-agreement verify) independently."""
+    from serd_spark.operators.linking import _doc_names, lsh_bands, signatures
+
+    _materialize(sf_dir, sigs, lambda: signatures(_doc_names(docs)))
+    _materialize(
+        sf_dir, bands,
+        lambda: lsh_bands(spark.read.parquet(_oracle_path(sf_dir, sigs))),
+    )
+
+
 def _materialize_extraction(spark: SparkSession, sf_dir: str) -> None:
     """Write one fresh raw-extraction run (triple rows rec='t' + error
     rows rec='e') where the DuckDB oracle can read it.  Overwritten on
@@ -209,6 +225,7 @@ __all__ = [
     '_kg_triples',
     '_materialize',
     '_materialize_extraction',
+    '_materialize_minhash',
     '_materialize_triples',
     '_n_pages',
     '_oracle_path',

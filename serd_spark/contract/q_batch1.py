@@ -923,19 +923,10 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (threshold 0.5 — same contract as dedup_minhash_lsh), recursive-
     CTE reachability closure, canon labels, sizes, and flags."""
     from serd_spark.operators.dedup import dup_clusters
-    from serd_spark.operators.linking import lsh_bands, signatures
 
     docs = _t(spark, sf_dir, "documents")
-    named = docs.select(
-        F.col("doc_id").cast("string").alias("entity"),
-        F.col("text").alias("name"),
-    )
-    _materialize(sf_dir, "minhash/sigs", lambda: signatures(named))
-    _materialize(
-        sf_dir, "minhash/bands",
-        lambda: lsh_bands(
-            spark.read.parquet(_oracle_path(sf_dir, "minhash/sigs"))
-        ),
+    _materialize_minhash(
+        spark, sf_dir, docs, "minhash/sigs", "minhash/bands"
     )
     return dup_clusters(docs, threshold=0.5)
 
@@ -1203,19 +1194,10 @@ def q_pair_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays prune → band join → agreement verify → label CASE from
     the materialized signatures/bands."""
     from serd_spark.operators.dedup import mine_training_pairs
-    from serd_spark.operators.linking import lsh_bands, signatures
 
     docs = _t(spark, sf_dir, "documents")
-    named = docs.select(
-        F.col("doc_id").cast("string").alias("entity"),
-        F.col("text").alias("name"),
-    )
-    _materialize(sf_dir, "minhash/sigs", lambda: signatures(named))
-    _materialize(
-        sf_dir, "minhash/bands",
-        lambda: lsh_bands(
-            spark.read.parquet(_oracle_path(sf_dir, "minhash/sigs"))
-        ),
+    _materialize_minhash(
+        spark, sf_dir, docs, "minhash/sigs", "minhash/bands"
     )
     return mine_training_pairs(docs, pos_threshold=0.5, neg_floor=0.25)
 

@@ -289,21 +289,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the band join, the agreement verify, the (jaccard DESC,
     old id ASC) argmax, and the three-way status CASE."""
     from serd_spark.operators.dedup import incremental_dedup
-    from serd_spark.operators.linking import lsh_bands, signatures
 
     new, old = _inc_split(spark, sf_dir)
-    for tag, side in (("new", new), ("old", old)):
-        named = side.select(
-            F.col("doc_id").cast("string").alias("entity"),
-            F.col("text").alias("name"),
-        )
-        _materialize(sf_dir, f"inc/sigs_{tag}", lambda n=named: signatures(n))
-        _materialize(
-            sf_dir, f"inc/bands_{tag}",
-            lambda t=tag: lsh_bands(
-                spark.read.parquet(_oracle_path(sf_dir, f"inc/sigs_{t}"))
-            ),
-        )
+    _materialize_minhash(spark, sf_dir, new, "inc/sigs_new", "inc/bands_new")
+    _materialize_minhash(spark, sf_dir, old, "inc/sigs_old", "inc/bands_old")
     return incremental_dedup(new, old, threshold=0.5)
 
 

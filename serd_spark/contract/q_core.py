@@ -199,22 +199,10 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serd_spark.operators.dedup import minhash_near_dups
-    from serd_spark.operators.linking import lsh_bands, signatures
 
     docs = _t(spark, sf_dir, "documents")
-    # Materialize signatures + band hashes so DuckDB can replay the
-    # ENTIRE candidate pipeline (bucket-cap pruning → band equi-join →
-    # signature-agreement verify) independently.
-    named = docs.select(
-        F.col("doc_id").cast("string").alias("entity"),
-        F.col("text").alias("name"),
-    )
-    _materialize(sf_dir, "minhash/sigs", lambda: signatures(named))
-    _materialize(
-        sf_dir, "minhash/bands",
-        lambda: lsh_bands(
-            spark.read.parquet(_oracle_path(sf_dir, "minhash/sigs"))
-        ),
+    _materialize_minhash(
+        spark, sf_dir, docs, "minhash/sigs", "minhash/bands"
     )
     return minhash_near_dups(docs, threshold=0.5).orderBy(
         "entity_a", "entity_b"

@@ -9,9 +9,9 @@ Scale notes (the point of each design choice):
   ``(band, band_hash)`` — cost ∝ near-duplicate mass, not n². The
   signature stage is shuffle-free numpy over Arrow batches (shared
   with entity linking, serd_spark.operators.linking).
-- **SimHash**: 64-bit signature via JVM-side xxhash64 + bit ops; a
-  band split on 4×16-bit chunks gives Hamming-≤3 candidates with an
-  equi-join (Charikar's standard trick) — no Python at all.
+- **SimHash**: 64-bit signature from blake2b token hashes, numpy per
+  Arrow batch; a band split on 4×16-bit chunks gives Hamming-≤3
+  candidates with an equi-join (Charikar's standard trick).
 - **n-gram Jaccard**: exact verification for a candidate pair list;
   built-in array ops.
 - **embedding cosine**: random-hyperplane LSH buckets → in-bucket
@@ -25,14 +25,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from serd_spark.operators.linking import (
+    _doc_names,
+    _minhash_links,
     _prune_hot_buckets,
     _sig_jaccard,
-    candidate_pairs,
+    connected_components,
     lsh_bands,
     signatures,
-    verified_links,
 )
-from serd_spark.operators.text import fingerprint, tokens
+from serd_spark.operators.text import fingerprint
 
 
 # --------------------------------------------------------------- exact
@@ -78,61 +79,12 @@ def minhash_near_dups(
     """MinHash+LSH near-duplicate pairs over a documents table.
     Returns (entity_a, entity_b, jaccard_est) with ids as strings
     (shared machinery with entity linking)."""
-    named = docs.select(
-        F.col(id_col).cast("string").alias("entity"),
-        F.col(text_col).alias("name"),
-    )
-    sigs = signatures(named).localCheckpoint(eager=False)
-    return verified_links(
-        # verified_links' per-pair groupBy dedups band multiplicity —
-        # skip candidate_pairs' distinct shuffle
-        candidate_pairs(lsh_bands(sigs), max_bucket=max_bucket, dedup=False),
-        sigs,
-        threshold=threshold,
+    return _minhash_links(
+        _doc_names(docs, id_col, text_col), threshold, max_bucket
     )
 
 
 # ------------------------------------------------------------- simhash
-
-def simhash64(col: Column) -> Column:
-    """64-bit SimHash of the whitespace token set — pure JVM bit
-    arithmetic, stays in WholeStageCodegen.
-
-    Per token t: h = xxhash64(t); each of the 64 bit positions votes
-    +1/-1; the signature bit is the vote sign. Computed as a fold
-    over the token array holding 64 counters packed in an array.
-    """
-    toks = F.array_distinct(tokens(F.lower(col)))
-    # shift amounts must be Python ints in the PySpark API → unroll
-    # the 64 bit positions at expression-build time
-    bit_votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(
-                        F.shiftrightunsigned(F.xxhash64(t), i)
-                        .bitwiseAND(F.lit(1)) == 1,
-                        F.lit(1),
-                    ).otherwise(F.lit(-1))
-                    for i in range(64)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    sig = F.lit(0).cast("long")
-    for i in range(64):
-        sig = sig.bitwiseOR(
-            F.when(
-                F.element_at(bit_votes, i + 1) > 0,
-                F.shiftleft(F.lit(1).cast("long"), i),
-            ).otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
 
 def popcount64(x) -> "np.ndarray":
     """Vectorized 64-bit popcount (SWAR) — numpy 1.x has no
@@ -153,9 +105,8 @@ def popcount64(x) -> "np.ndarray":
 
 def simhash64_fast(texts) -> "pd.Series":
     """Vectorized SimHash over an Arrow batch: blake2b token hashes
-    (stable across processes) unpacked to bit matrices with numpy.
-    ~50× the throughput of the pure-codegen ``simhash64`` whose
-    64-way bit unroll produces a multi-MB codegen expression."""
+    (stable across processes) unpacked to bit matrices with numpy;
+    the signature bit is the sign of the 64 per-token bit votes."""
     import hashlib
 
     import numpy as np
@@ -186,17 +137,9 @@ def simhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    fast: bool = True,
 ) -> DataFrame:
-    """``fast=True`` (default): Arrow-vectorized numpy SimHash.
-    ``fast=False``: the pure-built-in ``simhash64`` expression (kept
-    for environments where Python workers are unavailable). The two
-    use different token hash functions, so signatures are internally
-    consistent but not interchangeable between modes."""
-    if not fast:
-        return docs.select(
-            F.col(id_col), simhash64(F.col(text_col)).alias("simhash")
-        )
+    """(id_col, simhash): 64-bit SimHash per document
+    (``simhash64_fast``, Arrow-vectorized numpy)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
@@ -211,7 +154,6 @@ def simhash_near_dups(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    fast: bool = True,
     max_bucket: int | None = 4096,
 ) -> DataFrame:
     """Hamming-≤k candidate pairs via 4×16-bit chunk equality (any
@@ -226,7 +168,7 @@ def simhash_near_dups(
     is pruned are lost, so the Hamming-≤3 recall guarantee is exact
     only below the cap (pass ``None`` for guaranteed-complete
     output on bounded inputs)."""
-    sigs = simhash_signatures(docs, id_col, text_col, fast=fast)
+    sigs = simhash_signatures(docs, id_col, text_col)
     chunks = sigs.select(
         id_col,
         "simhash",
@@ -443,16 +385,10 @@ def incremental_dedup(
 
     to_near = new_docs.join(exact.select(id_col), id_col, "left_anti")
     sig_new = signatures(
-        to_near.select(
-            F.col(id_col).cast("string").alias("entity"),
-            F.col(text_col).alias("name"),
-        )
+        _doc_names(to_near, id_col, text_col)
     ).localCheckpoint(eager=False)
     sig_old = signatures(
-        old_docs.select(
-            F.col(id_col).cast("string").alias("entity"),
-            F.col(text_col).alias("name"),
-        )
+        _doc_names(old_docs, id_col, text_col)
     ).localCheckpoint(eager=False)
     bn = _prune_hot_buckets(lsh_bands(sig_new), max_bucket)
     bo = _prune_hot_buckets(lsh_bands(sig_old), max_bucket)
@@ -609,8 +545,6 @@ def dup_clusters(
 
     Returns (id_col, canon_id, cluster_size, is_canonical) for EVERY
     document."""
-    from serd_spark.operators.linking import connected_components
-
     pairs = minhash_near_dups(
         docs,
         id_col=id_col,
@@ -672,24 +606,10 @@ def mine_training_pairs(
 
     Returns (id_a, id_b, jaccard_est, label) with id_a < id_b as
     STRINGS (the linking contract order) cast back to longs."""
-    from serd_spark.operators.linking import (
-        candidate_pairs,
-        lsh_bands,
-        signatures,
-        verified_links,
-    )
-
     if not 0.0 <= neg_floor < pos_threshold <= 1.0:
         raise ValueError("need 0 <= neg_floor < pos_threshold <= 1")
-    named = docs.select(
-        F.col(id_col).cast("string").alias("entity"),
-        F.col(text_col).alias("name"),
-    )
-    sigs = signatures(named).localCheckpoint(eager=False)
-    verified = verified_links(
-        candidate_pairs(lsh_bands(sigs), max_bucket=max_bucket, dedup=False),
-        sigs,
-        threshold=neg_floor,
+    verified = _minhash_links(
+        _doc_names(docs, id_col, text_col), neg_floor, max_bucket
     )
     return verified.select(
         F.col("entity_a").cast("long").alias("id_a"),

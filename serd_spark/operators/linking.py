@@ -37,7 +37,7 @@ import hashlib
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -53,7 +53,6 @@ _A = _RNG.integers(1, _MERSENNE, size=N_PERM, dtype=np.uint64)
 _B = _RNG.integers(0, _MERSENNE, size=N_PERM, dtype=np.uint64)
 
 SIG_SCHEMA = "entity string, sig array<long>"
-BAND_SCHEMA = "entity string, band int, band_hash long"
 
 NAME_PREDICATES = (
     "http://schema.org/name",
@@ -118,19 +117,28 @@ def signatures(names: DataFrame) -> DataFrame:
     """entity → minhash signature. Shuffle-free map stage; numpy per
     batch, memoized per worker on the name string."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs = []
-            for n in pdf["name"]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            col = batch.column("name").to_pylist()
+            buf = np.empty((len(col), N_PERM), dtype=np.int64)
+            for i, n in enumerate(col):
                 s = _SIG_MEMO.get(n)
                 if s is None:
                     s = minhash_signature(n)
                     if len(_SIG_MEMO) < 65536:
                         _SIG_MEMO[n] = s
-                sigs.append(s.tolist())
-            yield pd.DataFrame({"entity": pdf["entity"], "sig": sigs})
+                buf[i] = s
+            # a ListArray over the flat buffer: Spark 4.1 rejects
+            # FixedSizeList for array<long> (UNSUPPORTED_ARROWTYPE)
+            offsets = pa.array(
+                np.arange(0, buf.size + 1, N_PERM, dtype=np.int32)
+            )
+            sig = pa.ListArray.from_arrays(offsets, pa.array(buf.ravel()))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("entity"), sig], names=["entity", "sig"]
+            )
 
-    return names.mapInPandas(run, schema=SIG_SCHEMA)
+    return names.mapInArrow(run, schema=SIG_SCHEMA)
 
 
 def lsh_bands(sigs: DataFrame) -> DataFrame:
@@ -235,8 +243,7 @@ def verified_links(
 ) -> DataFrame:
     """Exact signature-agreement fraction (the minhash Jaccard
     estimator) — JVM-side zip_with, no Python. Signatures are joined
-    back onto the deduplicated pair list (far smaller than the raw
-    band join), AQE picking broadcast when sigs fit."""
+    back onto the pair list, AQE picking broadcast when sigs fit."""
     sa = sigs.select(
         F.col("entity").alias("entity_a"), F.col("sig").alias("sig_a")
     )
@@ -298,13 +305,11 @@ def connected_components(
     # driver_threshold=0 (forced distributed path) skips the count
     # probe entirely — no wasted action on the at-scale path
     if driver_threshold > 0 and edges.count() < driver_threshold:
-        # Arrow both directions: toPandas / createDataFrame(pandas)
+        # Arrow both directions: toArrow / createDataFrame(pa.Table)
         # move columnar batches; the old row-wise collect() +
         # createDataFrame(list-of-tuples) pickled every row (measured
         # ~0.5 s of the 0.7 s CC phase at sf0.1 on 77k edges)
-        import pandas as pd
-
-        pdf = edges.toPandas()
+        tbl = edges.toArrow()
         spark = edges.sparkSession
         parent: dict[str, str] = {}
 
@@ -316,7 +321,10 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        for a, b in zip(pdf["entity_a"].values, pdf["entity_b"].values):
+        for a, b in zip(
+            tbl.column("entity_a").to_pylist(),
+            tbl.column("entity_b").to_pylist(),
+        ):
             parent.setdefault(a, a)
             parent.setdefault(b, b)
             ra, rb = find(a), find(b)
@@ -326,10 +334,11 @@ def connected_components(
                     parent[rb] = ra
                 else:
                     parent[ra] = rb
-        out = pd.DataFrame(
+        # typed arrays: an empty edge set still yields string columns
+        out = pa.table(
             {
-                "entity": list(parent.keys()),
-                "canon": [find(e) for e in parent],
+                "entity": pa.array(list(parent), pa.string()),
+                "canon": pa.array([find(e) for e in parent], pa.string()),
             }
         )
         return spark.createDataFrame(out, schema="entity string, canon string")
@@ -413,6 +422,40 @@ def connected_components(
     return labels
 
 
+def _doc_names(
+    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
+) -> DataFrame:
+    """Documents → the (entity, name) linking input, ids as strings."""
+    return docs.select(
+        F.col(id_col).cast("string").alias("entity"),
+        F.col(text_col).alias("name"),
+    )
+
+
+def _minhash_links(
+    named: DataFrame,
+    threshold: float,
+    max_bucket: int,
+    partitions: int | None = None,
+) -> DataFrame:
+    """(entity, name) → verified links (entity_a, entity_b,
+    jaccard_est): signatures → LSH bands → candidate join → verify,
+    the one MinHash-LSH composition behind linking and dedup."""
+    # the signature stage (Python minhash) feeds three plan branches
+    # (bands + both verify joins) — materialize it once
+    sigs = signatures(named).localCheckpoint(eager=False)
+    return verified_links(
+        # no distinct shuffle here: verified_links' per-pair groupBy
+        # dedups band-multiplicity anyway
+        candidate_pairs(
+            lsh_bands(sigs), max_bucket=max_bucket, dedup=False,
+            partitions=partitions,
+        ),
+        sigs,
+        threshold=threshold,
+    )
+
+
 def link_entities(
     triples: DataFrame,
     threshold: float = 0.7,
@@ -435,19 +478,8 @@ def link_entities(
     ``partitions`` is forwarded to ``candidate_pairs`` (None: AQE
     sizes the band join).
     """
-    names = entity_names(triples)
-    # the signature stage (Python minhash) feeds three plan branches
-    # (bands + both verify joins) — materialize it once
-    sigs = signatures(names).localCheckpoint(eager=False)
-    links = verified_links(
-        # no distinct shuffle here: verified_links' per-pair groupBy
-        # dedups band-multiplicity anyway
-        candidate_pairs(
-            lsh_bands(sigs), max_bucket=max_bucket, dedup=False,
-            partitions=partitions,
-        ),
-        sigs,
-        threshold=threshold,
+    links = _minhash_links(
+        entity_names(triples), threshold, max_bucket, partitions
     ).localCheckpoint(eager=False)
     # links checkpointed LAZILY: the first action (CC's collect on the
     # driver path, or round 0 of pointer jumping) materializes it, and

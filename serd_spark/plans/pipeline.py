@@ -50,12 +50,6 @@ from serd_spark.operators.materialize import (
 )
 from serd_spark.sources.pages import latest_crawl
 
-LINEAGE_SCHEMA = (
-    "partition_id int, input_rows long, triples_out long, bad_docs long, "
-    "wall_ms long"
-)
-
-
 @dataclass
 class RunResult:
     run_id: str

@@ -269,16 +269,19 @@ class TurtleParser:
                 self._resync(start)
         return self.statements
 
-    def _resync(self, start: int) -> None:
+    def _resync(self, start: int, block: bool = False) -> None:
         """Lax-mode resynchronization: skip to just past the next
         statement terminator ('.' at top level, or '}' in TriG),
         ignoring terminators inside strings/IRIs (≙ serdi -l skipping
-        the bad statement)."""
-        i = max(self.pos, start + 1)
+        the bad statement). Inside a TriG graph block (``block``) only
+        the block's closing '}' terminates. A terminator AT the error
+        (a stray '.') is the bad statement's own; every branch below
+        moves past ``start``, so the scan may begin there."""
+        i = max(self.pos, start)
         s, n = self.s, self.n
         while i < n:
             c = s[i]
-            if c == ".":
+            if c == "." and not block:
                 self.pos = i + 1
                 return
             if c == "}" and self.trig:
@@ -296,7 +299,7 @@ class TurtleParser:
                     j = i + 1
                     while j < n and s[j] != c and s[j] not in "\n\r":
                         j += 2 if s[j] == "\\" else 1
-                    if j >= n or s[j] in "\n\r":
+                    if (j >= n or s[j] in "\n\r") and not block:
                         self.pos = j
                         return
                     i = j + 1
@@ -439,6 +442,7 @@ class TurtleParser:
         return self._read_prefixed_name()
 
     def _read_wrapped_graph(self, label: Term | None) -> None:
+        start = self.pos
         self._expect("{")
         prev = self.graph
         self.graph = label
@@ -459,6 +463,13 @@ class TurtleParser:
                     break
                 else:
                     self._err("expected '.' or '}' in graph block")
+        except ParseError as e:
+            if not self.lax:
+                raise
+            # resync to the block's own '}': resuming after the bad
+            # statement's '.' would read the '}' as a statement start
+            self.errors.append((e.line, e.col, e.message))
+            self._resync(start, block=True)
         finally:
             self.graph = prev
 

@@ -10,6 +10,7 @@ from serd_spark.operators.linking import (
     connected_components,
     link_entities,
     minhash_signature,
+    signatures,
 )
 
 
@@ -103,6 +104,41 @@ def test_connected_components_distributed_matches_driver(spark):
     # sanity on content, not just agreement
     assert driver["c20"] == "c00"
     assert driver["zz"] == driver["mm"] == "aa"
+
+
+def test_signatures_match_minhash_signature(spark):
+    """The Arrow signature stage emits minhash_signature(name) per row,
+    across split batches (3 rows each) and an empty input partition."""
+    names = ["", "a", "ab", "   ", "\t \n", "Acme Corporation",
+             "Ünïcødé Café", "東京タワー", "naïve x", "zz"]
+    rows = [(f"e{i}", n) for i, n in enumerate(names)]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "3")
+    try:
+        parts = spark.sparkContext.parallelize(
+            [rows[:7], [], rows[7:]], 3
+        ).flatMap(lambda part: part)
+        df = spark.createDataFrame(parts, "entity string, name string")
+        assert parts.glom().map(len).collect() == [7, 0, 3]
+        sigs = signatures(df)
+        got = {r.entity: r.sig for r in sigs.collect()}
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert sigs.schema.simpleString() == (
+        "struct<entity:string,sig:array<bigint>>"
+    )
+    assert got == {e: minhash_signature(n).tolist() for e, n in rows}
+
+
+def test_connected_components_empty_edges(spark):
+    edges = spark.createDataFrame([], "entity_a string, entity_b string")
+    out = connected_components(edges)
+    assert out.count() == 0
+    assert out.schema.simpleString() == "struct<entity:string,canon:string>"
 
 
 def test_link_entities_distributed_path(spark, name_triples):

@@ -223,6 +223,31 @@ def test_lax_parse_never_crashes_on_syntax_soup(doc):
     assert isinstance(triples, list) and isinstance(errors, list)
 
 
+@given(st.text(alphabet=string.ascii_letters + string.digits + " ;,[]()",
+               max_size=16))
+@settings(max_examples=100, deadline=None)
+def test_lax_parse_keeps_valid_around_garbage(garbage):
+    """valid ∥ garbage ∥ valid: lax parsing skips the bad statement
+    and keeps both valid neighbours — for TriG also when the garbage
+    sits inside a graph block."""
+    from serd_spark.rdf.ntriples import parse_nquads
+    from serd_spark.rdf.turtle import parse_trig
+
+    v1 = '<http://s> <http://p> "v1"'
+    v2 = '<http://s> <http://p> "v2"'
+    docs = (
+        (parse_turtle, f"{v1} .\n{garbage} .\n{v2} .\n"),
+        (parse_trig,
+         f"{v1} .\n<http://g> {{ <http://s> <http://p> {garbage} . }}\n"
+         f"{v2} .\n"),
+        (parse_nquads,
+         f"{v1} <http://g> .\n{garbage} .\n{v2} <http://g> .\n"),
+    )
+    for fn, doc in docs:
+        stmts, _ = fn(doc, "http://b/", lax=True)
+        assert {"v1", "v2"} <= {s.object.value for s in stmts}, (fn, doc)
+
+
 @given(
     st.integers(1, 24), st.integers(1, 24), st.sampled_from([3, 4]),
     st.integers(0, 2**32 - 1),

@@ -397,6 +397,32 @@ def test_lax_resync_ignores_dot_in_string():
     assert any(s.subject.value == "http://x" for s in stmts)
 
 
+def test_lax_stray_dot_keeps_next_statement():
+    """A stray '.' is its own bad statement's terminator: resync must
+    not skip past it to the NEXT statement's '.'."""
+    doc = '<http://s> <http://p> "v1" .\n.\n<http://s> <http://p> "v2" .\n'
+    stmts, errs = parse_turtle(doc, lax=True)
+    assert [s.object.value for s in stmts] == ["v1", "v2"]
+    assert len(errs) == 1
+
+
+@pytest.mark.parametrize(
+    "doc",
+    [
+        '<http://g> { <http://s> <http://p> BAD . }\n<http://s> <http://p> "ok" .\n',
+        '<http://g> { <http://s> <http://p> BAD }\n<http://s> <http://p> "ok" .\n',
+        'GRAPH <http://g> { <http://s> <http://p> BAD . }\n<http://s> <http://p> "ok" .\n',
+    ],
+)
+def test_trig_lax_resync_inside_graph_block(doc):
+    """A bad statement inside a graph block resyncs to the block's
+    closing '}': the '}' is no statement start, so there is no second
+    error and the statement after the block survives."""
+    stmts, errs = parse_trig(doc, lax=True)
+    assert [(s.object.value, s.graph) for s in stmts] == [("ok", None)]
+    assert len(errs) == 1 and errs[0][2] == "expected prefixed name"
+
+
 @pytest.mark.parametrize(
     "parse, doc",
     [
