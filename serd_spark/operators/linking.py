@@ -115,7 +115,8 @@ _SIG_MEMO: dict[str, np.ndarray] = {}
 
 def signatures(names: DataFrame) -> DataFrame:
     """entity → minhash signature. Shuffle-free map stage; numpy per
-    batch, memoized per worker on the name string."""
+    batch, memoized per worker on the name string. A null name gets no
+    signature: its row is dropped JVM-side, before the Python crossing."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
@@ -138,7 +139,9 @@ def signatures(names: DataFrame) -> DataFrame:
                 [batch.column("entity"), sig], names=["entity", "sig"]
             )
 
-    return names.mapInArrow(run, schema=SIG_SCHEMA)
+    return names.filter(F.col("name").isNotNull()).mapInArrow(
+        run, schema=SIG_SCHEMA
+    )
 
 
 def lsh_bands(sigs: DataFrame) -> DataFrame:

@@ -22,6 +22,8 @@ Design at 10^12 documents:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -206,6 +208,32 @@ def _key_bucket(col, n_buckets: int):
     ).cast("int")
 
 
+def _write_kbuckets(df: DataFrame, path: str, key: str, mode: str) -> None:
+    """The one keyed-table write: each ``kbucket``'s rows in one task,
+    sorted by key (the sort leads with the ``partitionBy`` column —
+    see ``write_triples``)."""
+    (
+        df.repartition("kbucket")
+        .sortWithinPartitions("kbucket", key)
+        .write.mode(mode)
+        .partitionBy("kbucket")
+        .parquet(path)
+    )
+
+
+@contextmanager
+def _dynamic_overwrite(spark):
+    """Overwrite only the partitions present in the write, then restore
+    the session's previous ``partitionOverwriteMode``."""
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(mode_key, "static")
+    spark.conf.set(mode_key, "dynamic")
+    try:
+        yield
+    finally:
+        spark.conf.set(mode_key, prev)
+
+
 def write_keyed_table(
     df: DataFrame, path: str, key: str, n_buckets: int = 64
 ) -> None:
@@ -214,13 +242,9 @@ def write_keyed_table(
     merges into. Buckets are md5-derived from the key: a pure
     function of row content, deterministic under retries, and
     recomputable by any engine reading the table."""
-    (
-        df.withColumn("kbucket", _key_bucket(F.col(key), n_buckets))
-        .repartition("kbucket")
-        .sortWithinPartitions("kbucket", key)
-        .write.mode("overwrite")
-        .partitionBy("kbucket")
-        .parquet(path)
+    _write_kbuckets(
+        df.withColumn("kbucket", _key_bucket(F.col(key), n_buckets)),
+        path, key, "overwrite",
     )
 
 
@@ -281,19 +305,8 @@ def upsert_keyed_table(
     )
     n_rows = merged.count()
 
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        (
-            merged.repartition("kbucket")
-            .sortWithinPartitions("kbucket", key)
-            .write.mode("overwrite")
-            .partitionBy("kbucket")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(mode_key, prev)
+    with _dynamic_overwrite(spark):
+        _write_kbuckets(merged, path, key, "overwrite")
 
     # dynamic overwrite only replaces partitions PRESENT in the write:
     # a bucket whose rows were all deleted produces no output rows, so
@@ -317,13 +330,9 @@ def append_keyed_table(
     streaming / micro-batch ingest path: cheap now, merged or
     compacted later). Each append adds files to its bucket dirs —
     that fragmentation is what ``compact_keyed_table`` repairs."""
-    (
-        df.withColumn("kbucket", _key_bucket(F.col(key), n_buckets))
-        .repartition("kbucket")
-        .sortWithinPartitions("kbucket", key)
-        .write.mode("append")
-        .partitionBy("kbucket")
-        .parquet(path)
+    _write_kbuckets(
+        df.withColumn("kbucket", _key_bucket(F.col(key), n_buckets)),
+        path, key, "append",
     )
 
 
@@ -377,19 +386,8 @@ def compact_keyed_table(
         .localCheckpoint(eager=True)
     )
     n_rows = merged.count()
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        (
-            merged.repartition("kbucket")
-            .sortWithinPartitions("kbucket", key)
-            .write.mode("overwrite")
-            .partitionBy("kbucket")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set(mode_key, prev)
+    with _dynamic_overwrite(spark):
+        _write_kbuckets(merged, path, key, "overwrite")
     return {
         "buckets_compacted": len(fragged),
         "files_before": files_before,

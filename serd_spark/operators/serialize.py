@@ -18,16 +18,18 @@ Two forms, both deterministic:
 
 from __future__ import annotations
 
+from itertools import repeat
+
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from serd_spark.rdf.model import BLANK, IRI, LITERAL, Statement, Term
+from serd_spark.rdf.model import BLANK, IRI, Statement, Term
 from serd_spark.rdf.ntriples import (
     _escape_iri,
     _escape_literal,
-    format_term,
     write_nquads,
     write_ntriples,
 )
@@ -104,6 +106,31 @@ def nt_lines(triples: DataFrame, quads: bool = False) -> DataFrame:
     )
 
 
+def _statements(cols, graphs: bool) -> list[Statement]:
+    """Triple-row columns (``cols[name]`` iterates one column: a
+    pandas frame or a dict of lists) → their ``Statement``s. Null
+    ``o_dt``/``o_lang`` are empty; with ``graphs``, a non-empty ``g``
+    becomes the graph term (``_:label`` → blank node, else IRI)."""
+    gs = cols["g"] if graphs else repeat(None)
+    out = []
+    for s, sk, p, o, ok, dt, lg, g in zip(
+        cols["s"], cols["s_kind"], cols["p"], cols["o"], cols["o_kind"],
+        cols["o_dt"], cols["o_lang"], gs,
+    ):
+        gt = None
+        if g:
+            gt = Term(BLANK, g[2:]) if g.startswith("_:") else Term(IRI, g)
+        out.append(
+            Statement(
+                Term(int(sk), s),
+                Term(IRI, p),
+                Term(int(ok), o, dt or "", lg or ""),
+                gt,
+            )
+        )
+    return out
+
+
 ROUNDTRIP_SCHEMA = "n_lines long, n_roundtrip long"
 
 
@@ -131,15 +158,7 @@ def roundtrip_check(triples: DataFrame) -> DataFrame:
         for pdf in batches:
             n = len(pdf)
             ok = 0
-            for s, sk, p, o, ok_, dt, lg in zip(
-                pdf["s"], pdf["s_kind"], pdf["p"],
-                pdf["o"], pdf["o_kind"], pdf["o_dt"], pdf["o_lang"],
-            ):
-                stmt = Statement(
-                    Term(int(sk), s),
-                    Term(IRI, p),
-                    Term(int(ok_), o, dt or "", lg or ""),
-                )
+            for stmt in _statements(pdf, graphs=False):
                 line = write_ntriples([stmt], relabel=False).strip()
                 stmts, errs = parse_ntriples(line)
                 if (
@@ -154,6 +173,36 @@ def roundtrip_check(triples: DataFrame) -> DataFrame:
     return cols.mapInPandas(run, schema=ROUNDTRIP_SCHEMA)
 
 
+_STMT_COLS = ("s", "s_kind", "p", "o", "o_kind", "o_dt", "o_lang")
+
+
+def _per_document(
+    triples: DataFrame, graphs: bool, render, schema: str
+) -> DataFrame:
+    """The one per-document writer: groupBy(url) → sort by stmt_ord →
+    ``render(statements)`` → one (url, text, n_statements) row per
+    url, through ``applyInArrow`` (no pandas). ``graphs`` keeps each
+    row's ``g`` as the statement's graph."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    out_schema = to_arrow_schema(_parse_datatype_string(schema))
+    names = _STMT_COLS + ("g",) if graphs else _STMT_COLS
+
+    def to_doc(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by("stmt_ord")
+        stmts = _statements(
+            {c: tbl.column(c).to_pylist() for c in names}, graphs
+        )
+        cols = ([tbl.column("url")[0].as_py()], [render(stmts)], [len(stmts)])
+        return pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, out_schema)],
+            schema=out_schema,
+        )
+
+    return triples.groupBy("url").applyInArrow(to_doc, schema=schema)
+
+
 DOC_SCHEMA = "url string, nt string, n_statements int"
 
 
@@ -161,32 +210,8 @@ def serialize_documents(triples: DataFrame, quads: bool = False) -> DataFrame:
     """→ DataFrame(url, nt, n_statements): one canonical NT/NQ
     document per url, statements in original document order, blanks
     relabeled b1,b2,… (byte-exact golden form)."""
-
-    def to_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("stmt_ord")
-        stmts = []
-        for r in pdf.itertuples(index=False):
-            s = Term(int(r.s_kind), r.s)
-            p = Term(IRI, r.p)
-            o = Term(int(r.o_kind), r.o, r.o_dt or "", r.o_lang or "")
-            g = None
-            if quads and r.g:
-                g = (
-                    Term(BLANK, r.g[2:])
-                    if r.g.startswith("_:")
-                    else Term(IRI, r.g)
-                )
-            stmts.append(Statement(s, p, o, g))
-        text = write_nquads(stmts) if quads else write_ntriples(stmts)
-        return pd.DataFrame(
-            {
-                "url": [pdf["url"].iloc[0]],
-                "nt": [text],
-                "n_statements": [len(stmts)],
-            }
-        )
-
-    return triples.groupBy("url").applyInPandas(to_doc, schema=DOC_SCHEMA)
+    render = write_nquads if quads else write_ntriples
+    return _per_document(triples, quads, render, DOC_SCHEMA)
 
 
 TURTLE_DOC_SCHEMA = "url string, turtle string, n_statements int"
@@ -205,36 +230,13 @@ def serialize_turtle_documents(
     from serd_spark.rdf.env import Env
     from serd_spark.rdf.turtle_writer import write_trig, write_turtle
 
-    def to_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("stmt_ord")
-        stmts = []
-        for r in pdf.itertuples(index=False):
-            s = Term(int(r.s_kind), r.s)
-            p = Term(IRI, r.p)
-            o = Term(int(r.o_kind), r.o, r.o_dt or "", r.o_lang or "")
-            g = None
-            if trig and r.g:
-                g = (
-                    Term(BLANK, r.g[2:])
-                    if r.g.startswith("_:")
-                    else Term(IRI, r.g)
-                )
-            stmts.append(Statement(s, p, o, g))
+    def render(stmts: list[Statement]) -> str:
         env = Env()
         if prefixes:
             env.prefixes = dict(prefixes)
-        text = write_trig(stmts, env) if trig else write_turtle(stmts, env)
-        return pd.DataFrame(
-            {
-                "url": [pdf["url"].iloc[0]],
-                "turtle": [text],
-                "n_statements": [len(stmts)],
-            }
-        )
+        return write_trig(stmts, env) if trig else write_turtle(stmts, env)
 
-    return triples.groupBy("url").applyInPandas(
-        to_doc, schema=TURTLE_DOC_SCHEMA
-    )
+    return _per_document(triples, trig, render, TURTLE_DOC_SCHEMA)
 
 
 SKOLEM_BASE = "https://serd-spark.invalid/.well-known/genid/"

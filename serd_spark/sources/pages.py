@@ -25,7 +25,7 @@ import hashlib
 from collections.abc import Iterator
 from datetime import datetime, timedelta, timezone
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -229,21 +229,22 @@ def synthesize_pages(
     richness: int = 1,
 ) -> DataFrame:
     """Distributed deterministic corpus: ``spark.range`` →
-    ``mapInPandas`` (generation is map-side, shuffle-free, and scales
+    ``mapInArrow`` (generation is map-side, shuffle-free, and scales
     linearly with cores — the generator itself must not be the bench
     bottleneck)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
     if partitions is None:
         partitions = max(spark.sparkContext.defaultParallelism, 8)
     base = spark.range(0, n_rows, 1, partitions)
+    schema = to_arrow_schema(_parse_datatype_string(PAGES_SCHEMA))
     recrawl_every = 50  # ~2% re-crawled urls
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # column lists, not rows-of-tuples (CLAUDE.md: pandas's
-            # row-wise constructor pays per-cell type inference)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             c_url, c_ts, c_html, c_text, c_lang = [], [], [], [], []
-            for i in pdf["id"]:
-                i = int(i)
+            for i in batch.column(0).to_pylist():
                 url, ts, html, text, lang = _page_for(i, seed, richness)
                 if i % recrawl_every == recrawl_every - 1:
                     # re-crawl of the previous page, later timestamp
@@ -256,14 +257,13 @@ def synthesize_pages(
                 c_html.append(html)
                 c_text.append(text)
                 c_lang.append(lang)
-            yield pd.DataFrame(
-                {
-                    "url": c_url, "warc_ts": c_ts, "html": c_html,
-                    "text": c_text, "lang": c_lang,
-                }
+            cols = (c_url, c_ts, c_html, c_text, c_lang)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                schema=schema,
             )
 
-    return base.mapInPandas(gen, schema=PAGES_SCHEMA)
+    return base.mapInArrow(gen, schema=PAGES_SCHEMA)
 
 
 # Decoded-size-aware split sizing for pages scans: the pages table

@@ -8,17 +8,17 @@ arbitrary byte and resynchronize reliably), so parallelism is BY FILE
 — exactly how production Common Crawl jobs run: ~1 GB per .warc,
 ~100k files per crawl, one task per file. ``read_warc`` scans with
 Spark's ``binaryFile`` source (one row per file, lazily read) and
-parses records in an iterator ``mapInPandas``; a smaller
+parses records in one iterator ``mapInArrow`` kernel; a smaller
 ``maxPartitionBytes`` cannot help here, so even file sizing is the
 writer's job (``write_warc`` shards by url hash into ``n_files``).
 
 Bomb discipline (CLAUDE.md): every record's work is bounded by its
 DECLARED Content-Length, validated against the remaining buffer
-BEFORE any slice — a record claiming 2 GB in a 1 KB file yields one
-error row, not an allocation. Malformed headers resync by scanning
-for the next ``WARC/`` magic, so one corrupt record never drops the
-rest of the file (the same lax side-output contract as the Turtle
-parser's ``rec='e'`` rows).
+BEFORE any slice — a record claiming 2 GB in a 1 KB file is one
+``(offset, message)`` error from ``parse_warc``, never an allocation;
+the lax ``read_*`` scans drop such records and keep no error rows.
+Malformed headers resync by scanning for the next ``WARC/`` magic, so
+one corrupt record never drops the rest of the file.
 
 Determinism: records are written sorted by (url, warc_ts) within each
 shard file, shard = md5-prefix of url — a pure function of the input
@@ -28,12 +28,11 @@ read-back roundtrip is oracle-checkable cross-engine.
 
 from __future__ import annotations
 
-import hashlib
 import os
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,10 +40,6 @@ from pyspark.sql import functions as F
 WARC_VERSION = b"WARC/1.0"
 _CRLF = b"\r\n"
 _HDR_END = b"\r\n\r\n"
-
-# columns of the parsed-record output (built from column lists)
-_READ_SCHEMA = "url string, warc_ts timestamp, html binary"
-_ERR_SCHEMA = "warc_file string, offset long, err string"
 
 
 def _warc_date(ts: datetime) -> str:
@@ -63,6 +58,30 @@ def _parse_warc_date(s: str) -> datetime:
     return datetime.strptime(s, fmt).replace(tzinfo=timezone.utc)
 
 
+def _record(
+    warc_type: str, head_lines: tuple[str, ...], content_type: str, body: bytes
+) -> bytes:
+    """The one WARC record framing: ``WARC/1.0`` header block (type,
+    ``head_lines``, content type, Content-Length), blank line, body,
+    two CRLFs."""
+    head = "\r\n".join(
+        (
+            f"WARC-Type: {warc_type}",
+            *head_lines,
+            f"Content-Type: {content_type}",
+            f"Content-Length: {len(body)}",
+        )
+    )
+    return (
+        WARC_VERSION + _CRLF + head.encode("utf-8") + _HDR_END
+        + body + _CRLF + _CRLF
+    )
+
+
+def _target(url: str, ts: datetime) -> tuple[str, str]:
+    return f"WARC-Target-URI: {url}", f"WARC-Date: {_warc_date(ts)}"
+
+
 def warc_record(url: str, ts: datetime, html: bytes) -> bytes:
     """One WARC response record wrapping an HTTP/1.1 200 response —
     the layout Common Crawl emits (WARC headers, blank line, HTTP
@@ -72,45 +91,36 @@ def warc_record(url: str, ts: datetime, html: bytes) -> bytes:
         b"Content-Type: text/html; charset=utf-8\r\n"
         b"Content-Length: " + str(len(html)).encode() + _HDR_END + html
     )
-    head = (
-        WARC_VERSION + _CRLF
-        + b"WARC-Type: response" + _CRLF
-        + b"WARC-Target-URI: " + url.encode("utf-8") + _CRLF
-        + b"WARC-Date: " + _warc_date(ts).encode() + _CRLF
-        + b"Content-Type: application/http; msgtype=response" + _CRLF
-        + b"Content-Length: " + str(len(http)).encode() + _HDR_END
+    return _record(
+        "response", _target(url, ts), "application/http; msgtype=response", http
     )
-    return head + http + _CRLF + _CRLF
 
 
 def wet_record(url: str, ts: datetime, text: str) -> bytes:
     """One WET conversion record (the Common-Crawl .wet artifact):
     the EXTRACTED TEXT of a page as a ``WARC-Type: conversion``
     record with a plain-text identity payload — no HTTP envelope."""
-    body = text.encode("utf-8")
-    head = (
-        WARC_VERSION + _CRLF
-        + b"WARC-Type: conversion" + _CRLF
-        + b"WARC-Target-URI: " + url.encode("utf-8") + _CRLF
-        + b"WARC-Date: " + _warc_date(ts).encode() + _CRLF
-        + b"Content-Type: text/plain" + _CRLF
-        + b"Content-Length: " + str(len(body)).encode() + _HDR_END
+    return _record(
+        "conversion", _target(url, ts), "text/plain", text.encode("utf-8")
     )
-    return head + body + _CRLF + _CRLF
+
+
+def wat_record(url: str, ts: datetime, wat_json: str) -> bytes:
+    """One WAT metadata record: per-page derived metadata JSON as a
+    ``WARC-Type: metadata`` record (identity JSON payload)."""
+    return _record(
+        "metadata", _target(url, ts), "application/json",
+        wat_json.encode("utf-8"),
+    )
 
 
 def warcinfo_record(filename: str) -> bytes:
     """The file-head warcinfo record real crawls carry — readers must
     skip non-response records, so the writer always emits one."""
-    body = b"software: serd-spark\r\nformat: WARC File Format 1.0\r\n"
-    head = (
-        WARC_VERSION + _CRLF
-        + b"WARC-Type: warcinfo" + _CRLF
-        + b"WARC-Filename: " + filename.encode("utf-8") + _CRLF
-        + b"Content-Type: application/warc-fields" + _CRLF
-        + b"Content-Length: " + str(len(body)).encode() + _HDR_END
+    return _record(
+        "warcinfo", (f"WARC-Filename: {filename}",), "application/warc-fields",
+        b"software: serd-spark\r\nformat: WARC File Format 1.0\r\n",
     )
-    return head + body + _CRLF + _CRLF
 
 
 def parse_warc(
@@ -203,6 +213,49 @@ def parse_warc(
     return records, errors
 
 
+def _read_records(
+    spark: SparkSession,
+    path: str,
+    lax: bool,
+    want_type: str,
+    col: str,
+    ddl: str,
+    decode,
+) -> DataFrame:
+    """The one reader behind ``read_warc``/``read_wet``/``read_wat``:
+    ``binaryFile`` scan → ``parse_warc`` per file → (url, warc_ts,
+    ``col``) rows, ``col`` typed by ``ddl`` and filled with
+    ``decode(payload)``. One task per file (see module docstring for why); output
+    batches are built from column lists against one Arrow schema
+    derived from the DDL on the driver."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    out_ddl = f"url string, warc_ts timestamp, {col} {ddl}"
+    schema = to_arrow_schema(_parse_datatype_string(out_ddl))
+    files = spark.read.format("binaryFile").load(path).select("content")
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            cols: tuple[list, list, list] = ([], [], [])
+            for content in batch.column(0).to_pylist():
+                recs, _errs = parse_warc(content, lax=lax, want_type=want_type)
+                for url, ts, body in recs:
+                    cols[0].append(url)
+                    cols[1].append(ts)
+                    cols[2].append(decode(body))
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                schema=schema,
+            )
+
+    return files.mapInArrow(run, schema=out_ddl)
+
+
+def _utf8(body: bytes) -> str:
+    return body.decode("utf-8", errors="replace")
+
+
 def read_warc(
     spark: SparkSession, path: str, lax: bool = True
 ) -> DataFrame:
@@ -210,24 +263,7 @@ def read_warc(
     (url, warc_ts, html) — the pages-table shape minus the derived
     text/lang columns, ready for ``latest_crawl`` + extraction.
     One task per file (see module docstring for why)."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            c_url: list[str] = []
-            c_ts: list[datetime] = []
-            c_html: list[bytes] = []
-            for content in pdf["content"]:
-                recs, _errs = parse_warc(bytes(content), lax=lax)
-                for url, ts, body in recs:
-                    c_url.append(url)
-                    c_ts.append(ts)
-                    c_html.append(body)
-            yield pd.DataFrame(
-                {"url": c_url, "warc_ts": c_ts, "html": c_html}
-            )
-
-    return files.mapInPandas(gen, schema=_READ_SCHEMA)
+    return _read_records(spark, path, lax, "response", "html", "binary", bytes)
 
 
 def read_wet(
@@ -236,28 +272,93 @@ def read_wet(
     """Scan WET shard files into (url, warc_ts, text) — conversion
     records with the identity plain-text payload decoded as UTF-8.
     Same by-file parallelism as ``read_warc``."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            c_url: list[str] = []
-            c_ts: list[datetime] = []
-            c_text: list[str] = []
-            for content in pdf["content"]:
-                recs, _errs = parse_warc(
-                    bytes(content), lax=lax, want_type="conversion"
-                )
-                for url, ts, body in recs:
-                    c_url.append(url)
-                    c_ts.append(ts)
-                    c_text.append(body.decode("utf-8", errors="replace"))
-            yield pd.DataFrame(
-                {"url": c_url, "warc_ts": c_ts, "text": c_text}
-            )
-
-    return files.mapInPandas(
-        gen, schema="url string, warc_ts timestamp, text string"
+    return _read_records(
+        spark, path, lax, "conversion", "text", "string", _utf8
     )
+
+
+def read_wat(
+    spark: SparkSession, path: str, lax: bool = True
+) -> DataFrame:
+    """Scan WAT shard files into (url, warc_ts, wat) — metadata
+    records with the JSON payload decoded as UTF-8."""
+    return _read_records(spark, path, lax, "metadata", "wat", "string", _utf8)
+
+
+_MANIFEST_SCHEMA = "file string, n_records long, n_bytes long"
+
+
+def _write_shards(
+    pages: DataFrame,
+    out_dir: str,
+    n_files: int,
+    col: str,
+    record,
+    suffix: str,
+) -> DataFrame:
+    """The one sharded writer behind ``write_warc``/``write_wet``/
+    ``write_wat``: (url, warc_ts, ``col``) rows become
+    ``record(url, ts, value)`` bytes in ``shard-NNNNN{suffix}`` files,
+    each led by a warcinfo record; returns the (file, n_records,
+    n_bytes) manifest as a DataFrame (one action materializes it).
+
+    Shard = md5-prefix of url mod ``n_files`` — a pure function of
+    the row, so the file SET and each file's byte content are
+    deterministic under retries and any input partitioning (records
+    sort by (url, warc_ts) within a shard). The buffer cost is one
+    shard file per task at a time — the writer-side analogue of the
+    ~1 GB-per-file sizing convention. ``out_dir`` must be storage all
+    executors can reach (a DFS mount on a real cluster; any local dir
+    on local[N])."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    os.makedirs(out_dir, exist_ok=True)
+    schema = to_arrow_schema(_parse_datatype_string(_MANIFEST_SCHEMA))
+    shard = (
+        F.conv(F.substring(F.md5(F.col("url")), 1, 8), 16, 10).cast("long")
+        % n_files
+    )
+    df = (
+        pages.select("url", "warc_ts", col)
+        .withColumn("_shard", shard)
+        .repartition(n_files, "_shard")
+        .sortWithinPartitions("_shard", "url", "warc_ts")
+    )
+
+    def write_parts(
+        batches: Iterator[pa.RecordBatch],
+    ) -> Iterator[pa.RecordBatch]:
+        bufs: dict[int, list[bytes]] = {}
+        for batch in batches:
+            for url, ts, value, sh in zip(
+                *(c.to_pylist() for c in batch.columns)
+            ):
+                bufs.setdefault(sh, []).append(record(url, ts, value))
+        cols: tuple[list, list, list] = ([], [], [])
+        for sh, recs in sorted(bufs.items()):
+            name = f"shard-{sh:05d}{suffix}"
+            data = warcinfo_record(name) + b"".join(recs)
+            with open(os.path.join(out_dir, name), "wb") as f:
+                f.write(data)
+            cols[0].append(name)
+            cols[1].append(len(recs))
+            cols[2].append(len(data))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
+        )
+
+    return df.mapInArrow(write_parts, schema=_MANIFEST_SCHEMA)
+
+
+def write_warc(
+    pages: DataFrame, out_dir: str, n_files: int = 8
+) -> DataFrame:
+    """Write (url, warc_ts, html) rows as ``n_files`` WARC shard
+    files under ``out_dir``; returns the (file, n_records, n_bytes)
+    manifest (sharding and determinism: ``_write_shards``)."""
+    return _write_shards(pages, out_dir, n_files, "html", warc_record, ".warc")
 
 
 def write_wet(
@@ -268,98 +369,8 @@ def write_wet(
     deterministic md5-url sharding and in-shard (url, warc_ts)
     ordering. Returns the same (file, n_records, n_bytes) manifest
     shape."""
-    os.makedirs(out_dir, exist_ok=True)
-    shard = (
-        F.conv(F.substring(F.md5(F.col("url")), 1, 8), 16, 10).cast("long")
-        % n_files
-    )
-    df = (
-        pages.select("url", "warc_ts", "text")
-        .withColumn("_shard", shard)
-        .repartition(n_files, "_shard")
-        .sortWithinPartitions("_shard", "url", "warc_ts")
-    )
-
-    def write_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bufs: dict[int, list[bytes]] = {}
-        for pdf in batches:
-            for url, ts, text, sh in zip(
-                pdf["url"], pdf["warc_ts"], pdf["text"], pdf["_shard"]
-            ):
-                ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                bufs.setdefault(int(sh), []).append(
-                    wet_record(str(url), ts, str(text))
-                )
-        c_file, c_recs, c_bytes = [], [], []
-        for sh, recs in sorted(bufs.items()):
-            name = f"shard-{sh:05d}.warc.wet"
-            data = warcinfo_record(name) + b"".join(recs)
-            with open(os.path.join(out_dir, name), "wb") as f:
-                f.write(data)
-            c_file.append(name)
-            c_recs.append(len(recs))
-            c_bytes.append(len(data))
-        yield pd.DataFrame(
-            {"file": c_file, "n_records": c_recs, "n_bytes": c_bytes}
-        )
-
-    return df.mapInPandas(
-        write_parts, schema="file string, n_records long, n_bytes long"
-    )
-
-
-def write_warc(
-    pages: DataFrame, out_dir: str, n_files: int = 8
-) -> DataFrame:
-    """Write (url, warc_ts, html) rows as ``n_files`` WARC shard
-    files under ``out_dir``; returns the (file, n_records, n_bytes)
-    manifest as a DataFrame (one action materializes it).
-
-    Shard = md5-prefix of url mod ``n_files`` — a pure function of
-    the row, so the file SET and each file's byte content are
-    deterministic under retries and any input partitioning (records
-    sort by (url, warc_ts) within a shard). The buffer cost is one
-    shard file per task at a time — the writer-side analogue of the
-    ~1 GB-per-file sizing convention. ``out_dir`` must be storage all
-    executors can reach (a DFS mount on a real cluster; any local dir
-    on local[N])."""
-    os.makedirs(out_dir, exist_ok=True)
-    shard = (
-        F.conv(F.substring(F.md5(F.col("url")), 1, 8), 16, 10).cast("long")
-        % n_files
-    )
-    df = (
-        pages.select("url", "warc_ts", "html")
-        .withColumn("_shard", shard)
-        .repartition(n_files, "_shard")
-        .sortWithinPartitions("_shard", "url", "warc_ts")
-    )
-
-    def write_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bufs: dict[int, list[bytes]] = {}
-        for pdf in batches:
-            for url, ts, html, sh in zip(
-                pdf["url"], pdf["warc_ts"], pdf["html"], pdf["_shard"]
-            ):
-                ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                bufs.setdefault(int(sh), []).append(
-                    warc_record(str(url), ts, bytes(html))
-                )
-        c_file, c_recs, c_bytes = [], [], []
-        for sh, recs in sorted(bufs.items()):
-            name = f"shard-{sh:05d}.warc"
-            data = warcinfo_record(name) + b"".join(recs)
-            with open(os.path.join(out_dir, name), "wb") as f:
-                f.write(data)
-            c_file.append(name)
-            c_recs.append(len(recs))
-            c_bytes.append(len(data))
-        yield pd.DataFrame(
-            {"file": c_file, "n_records": c_recs, "n_bytes": c_bytes}
-        )
-
-    return df.mapInPandas(
-        write_parts, schema="file string, n_records long, n_bytes long"
+    return _write_shards(
+        pages, out_dir, n_files, "text", wet_record, ".warc.wet"
     )
 
 
@@ -385,50 +396,6 @@ def wat_payload(url_col: str = "url", html_col: str = "html"):
     )
 
 
-def wat_record(url: str, ts: datetime, wat_json: str) -> bytes:
-    """One WAT metadata record: per-page derived metadata JSON as a
-    ``WARC-Type: metadata`` record (identity JSON payload)."""
-    body = wat_json.encode("utf-8")
-    head = (
-        WARC_VERSION + _CRLF
-        + b"WARC-Type: metadata" + _CRLF
-        + b"WARC-Target-URI: " + url.encode("utf-8") + _CRLF
-        + b"WARC-Date: " + _warc_date(ts).encode() + _CRLF
-        + b"Content-Type: application/json" + _CRLF
-        + b"Content-Length: " + str(len(body)).encode() + _HDR_END
-    )
-    return head + body + _CRLF + _CRLF
-
-
-def read_wat(
-    spark: SparkSession, path: str, lax: bool = True
-) -> DataFrame:
-    """Scan WAT shard files into (url, warc_ts, wat) — metadata
-    records with the JSON payload decoded as UTF-8."""
-    files = spark.read.format("binaryFile").load(path).select("content")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            c_url: list[str] = []
-            c_ts: list[datetime] = []
-            c_wat: list[str] = []
-            for content in pdf["content"]:
-                recs, _errs = parse_warc(
-                    bytes(content), lax=lax, want_type="metadata"
-                )
-                for url, ts, body in recs:
-                    c_url.append(url)
-                    c_ts.append(ts)
-                    c_wat.append(body.decode("utf-8", errors="replace"))
-            yield pd.DataFrame(
-                {"url": c_url, "warc_ts": c_ts, "wat": c_wat}
-            )
-
-    return files.mapInPandas(
-        gen, schema="url string, warc_ts timestamp, wat string"
-    )
-
-
 def write_wat(
     pages: DataFrame, out_dir: str, n_files: int = 8
 ) -> DataFrame:
@@ -436,41 +403,6 @@ def write_wat(
     ``write_warc``'s deterministic sharding/ordering over the
     derived-metadata artifact. Callers derive ``wat`` with
     ``wat_payload`` (or any deterministic JSON column)."""
-    os.makedirs(out_dir, exist_ok=True)
-    shard = (
-        F.conv(F.substring(F.md5(F.col("url")), 1, 8), 16, 10).cast("long")
-        % n_files
-    )
-    df = (
-        pages.select("url", "warc_ts", "wat")
-        .withColumn("_shard", shard)
-        .repartition(n_files, "_shard")
-        .sortWithinPartitions("_shard", "url", "warc_ts")
-    )
-
-    def write_parts(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bufs: dict[int, list[bytes]] = {}
-        for pdf in batches:
-            for url, ts, wat, sh in zip(
-                pdf["url"], pdf["warc_ts"], pdf["wat"], pdf["_shard"]
-            ):
-                ts = ts.to_pydatetime() if hasattr(ts, "to_pydatetime") else ts
-                bufs.setdefault(int(sh), []).append(
-                    wat_record(str(url), ts, str(wat))
-                )
-        c_file, c_recs, c_bytes = [], [], []
-        for sh, recs in sorted(bufs.items()):
-            name = f"shard-{sh:05d}.warc.wat"
-            data = warcinfo_record(name) + b"".join(recs)
-            with open(os.path.join(out_dir, name), "wb") as f:
-                f.write(data)
-            c_file.append(name)
-            c_recs.append(len(recs))
-            c_bytes.append(len(data))
-        yield pd.DataFrame(
-            {"file": c_file, "n_records": c_recs, "n_bytes": c_bytes}
-        )
-
-    return df.mapInPandas(
-        write_parts, schema="file string, n_records long, n_bytes long"
+    return _write_shards(
+        pages, out_dir, n_files, "wat", wat_record, ".warc.wat"
     )

@@ -240,3 +240,39 @@ def test_incremental_dedup_never_pairs_within_increment(spark):
     # 10 and 11 duplicate EACH OTHER but nothing in the old corpus:
     # both must be kept — the increment never matches itself
     assert out[10].status == "kept" and out[11].status == "kept"
+
+
+def test_null_text_document_has_no_signature(spark):
+    """A null-text document gets no signature instead of failing the
+    signature task: no near-dup pair, a singleton cluster, and 'kept'
+    as an increment (md5(null) is null, so no exact match either)."""
+    from serd_spark.operators.dedup import (
+        dup_clusters,
+        incremental_dedup,
+        minhash_near_dups,
+    )
+
+    base = ("the quick brown fox jumps over the lazy dog "
+            "and then runs far away into the deep dark forest tonight")
+    docs = spark.createDataFrame(
+        [
+            (1, base),
+            (2, base.replace("tonight", "tonite")),
+            (3, None),
+            (4, "completely different text about spark plans"),
+        ],
+        "doc_id long, text string",
+    )
+    pairs = minhash_near_dups(docs, threshold=0.5).collect()
+    assert [(r.entity_a, r.entity_b) for r in pairs] == [("1", "2")]
+
+    clusters = {r.doc_id: r for r in dup_clusters(docs).collect()}
+    assert clusters[2].canon_id == 1 and clusters[2].cluster_size == 2
+    assert clusters[3].canon_id == 3 and clusters[3].cluster_size == 1
+
+    new = spark.createDataFrame(
+        [(10, None), (11, base)], "doc_id long, text string"
+    )
+    out = {r.doc_id: r for r in incremental_dedup(new, docs).collect()}
+    assert out[10].status == "kept" and out[10].match_id is None
+    assert out[11].status == "exact" and out[11].match_id == 1

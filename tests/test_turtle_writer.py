@@ -165,6 +165,44 @@ def test_spark_serialize_turtle(spark):
         assert len(stmts) == r.n_statements
 
 
+def test_spark_per_document_graphs(spark):
+    """A named graph and a blank-node graph label survive both
+    per-document writers (N-Quads and TriG) and reparse to the input."""
+    from serd_spark.operators.serialize import (
+        serialize_documents,
+        serialize_turtle_documents,
+    )
+    from serd_spark.rdf.ntriples import parse_nquads
+
+    rows = [
+        ("http://d/1", 0, "http://e/g1", "http://e/1", 0, "http://p/n",
+         "x", 1, None, "en"),
+        ("http://d/1", 1, "_:b1", "http://e/2", 0, "http://p/v",
+         "5", 1, XSD_INTEGER, None),
+        ("http://d/1", 2, "", "http://e/3", 0, "http://p/l",
+         "http://e/1", 0, None, None),
+    ]
+    triples = spark.createDataFrame(
+        rows,
+        "url string, stmt_ord int, g string, s string, s_kind tinyint, "
+        "p string, o string, o_kind tinyint, o_dt string, o_lang string",
+    )
+    want = {
+        Statement(iri("http://e/1"), iri("http://p/n"),
+                  literal("x", lang="en"), iri("http://e/g1")),
+        Statement(iri("http://e/2"), iri("http://p/v"),
+                  literal("5", XSD_INTEGER), blank("b1")),
+        Statement(iri("http://e/3"), iri("http://p/l"), iri("http://e/1")),
+    }
+    [nq] = serialize_documents(triples, quads=True).collect()
+    [trig] = serialize_turtle_documents(triples, trig=True).collect()
+    assert nq.n_statements == trig.n_statements == 3
+    got_nq, errs = parse_nquads(nq.nt)
+    assert not errs and set(got_nq) == want
+    got_trig, errs = parse_trig(trig.turtle, "")
+    assert not errs and set(got_trig) == want
+
+
 def test_trig_multiline_literal_not_corrupted():
     """Review finding: line-level post-processing used to delete
     '@prefix'-looking lines inside long strings and re-indent literal

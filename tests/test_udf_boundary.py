@@ -1,6 +1,6 @@
-"""Structural guard for the UDF-output rule: every module a
-``run_pipeline`` job crosses moves Python-stage data through Arrow
-only — no pandas import, ``mapInPandas`` or ``toPandas``."""
+"""Structural guard for the UDF-output rule: every module a pipeline
+job or its ingest crosses moves Python-stage data through Arrow only —
+no pandas import, ``mapInPandas`` or ``toPandas``."""
 
 import os
 import re
@@ -19,6 +19,8 @@ _PANDAS = re.compile(
         "serd_spark/operators/linking.py",
         "serd_spark/operators/extract.py",
         "serd_spark/plans/pipeline.py",
+        "serd_spark/sources/pages.py",
+        "serd_spark/sources/warc.py",
     ],
 )
 def test_pipeline_modules_cross_through_arrow_only(rel):

@@ -111,6 +111,35 @@ def test_write_is_deterministic(spark, tmp_path):
     assert outs[0] == outs[1]
 
 
+@pytest.mark.parametrize(
+    "reader, record, warc_type, value",
+    [
+        ("read_warc", "warc_record", "response", b"<p>ok</p>"),
+        ("read_wet", "wet_record", "conversion", "ok — text"),
+        ("read_wat", "wat_record", "metadata", '{"url": "http://ok/"}'),
+    ],
+)
+def test_lax_read_drops_garbage_and_bomb(
+    spark, tmp_path, reader, record, warc_type, value
+):
+    """A shard holding a garbage prefix, a declared-length bomb and one
+    valid record reads back as exactly that record."""
+    from serd_spark.sources import warc
+
+    bomb = (
+        b"WARC/1.0\r\nWARC-Type: " + warc_type.encode() + b"\r\n"
+        b"WARC-Target-URI: http://x/\r\n"
+        b"WARC-Date: 2026-01-01T00:00:00Z\r\n"
+        b"Content-Length: 2147483647\r\n\r\nshort"
+    )
+    good = getattr(warc, record)("http://ok/", TS, value)
+    (tmp_path / "shard.warc").write_bytes(b"NOT A WARC\r\n" + bomb + good)
+    rows = getattr(warc, reader)(spark, str(tmp_path / "shard.warc")).collect()
+    assert [tuple(r) for r in rows] == [
+        ("http://ok/", TS.replace(tzinfo=None), value)
+    ]
+
+
 def test_wet_record_roundtrip_and_type_filter():
     from serd_spark.sources.warc import parse_warc, wet_record
 
